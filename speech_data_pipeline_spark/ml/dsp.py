@@ -1,29 +1,15 @@
-"""Pure-NumPy DSP kernels: X11 resample, X12 mel spectrogram, X13 STFT/iSTFT.
+"""Pure-NumPy DSP kernels: Hann window, framing, X11 resample.
 
-The reference reaches for codec/DSP libraries at these sites:
+The reference reaches for ``librosa.resample`` at
+``modules/models/dnsmos.py:126``, ``modules/models/silero_vad.py:161``
+and ``modules/speaker_rematch.py:17-23``. librosa is not a dependency:
+resampling is pure math, implemented here on ``np.fft`` only. These are NumPy-level helpers meant to run inside
+Arrow-batched kernels; nothing here touches Spark.
 
-- X11 resample: ``modules/models/dnsmos.py:126`` and
-  ``modules/models/silero_vad.py:161`` (``librosa.resample``),
-  ``modules/speaker_rematch.py:17-23``;
-- X12 mel spectrogram: ``modules/models/dnsmos.py:54-76``
-  (``librosa.feature.melspectrogram`` + ``power_to_db``);
-- X13 STFT/iSTFT: ``modules/models/separate_fast.py:53-106``
-  (``torch.stft`` / ``torch.istft``, Hann window, centered).
-
-None of those libraries ship in this container, but all three operators
-are pure math — implemented here on ``np.fft`` only, so the engine's
-spectral path is *real*, not a stub. These are NumPy-level helpers
-meant to run inside Arrow-batched kernels
-(:mod:`speech_data_pipeline_spark.operators.spectral` wraps them as
-DataFrame operators); nothing here touches Spark.
-
-Conventions (matching the reference's call sites):
+Conventions:
 
 - periodic Hann window (``torch.stft`` and librosa both default to
   ``sym=False``);
-- STFT is centered via reflect padding, one-sided (rfft);
-- mel scale is Slaney-style (librosa default ``htk=False``) with
-  Slaney band-width normalization;
 - resample is the Fourier method (spectrum truncate/zero-pad), exact
   for band-limited signals.
 """
@@ -38,148 +24,15 @@ def hann(n_fft: int) -> np.ndarray:
     return 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(n_fft) / n_fft)
 
 
-def frame_signal(
-    x: np.ndarray, n_fft: int, hop: int, center: bool = True
-) -> np.ndarray:
-    """Slice ``x`` into overlapping frames ``(n_frames, n_fft)``.
-
-    ``center=True`` reflect-pads by ``n_fft//2`` on both ends so frame
-    ``i`` is centered on sample ``i*hop`` (torch.stft/librosa
-    semantics). Signals shorter than the reflection width fall back to
-    edge padding (reflect is undefined there).
-    """
+def frame_signal(x: np.ndarray, n_fft: int, hop: int) -> np.ndarray:
+    """Slice ``x`` into overlapping, uncentered frames ``(n_frames, n_fft)``;
+    a signal shorter than one frame is zero-padded to one frame."""
     x = np.asarray(x, dtype=np.float64)
-    if center:
-        pad = n_fft // 2
-        mode = "reflect" if len(x) > 1 else "edge"
-        if len(x) == 0:
-            x = np.zeros(1)
-        x = np.pad(x, (pad, pad), mode=mode)
     if len(x) < n_fft:
         x = np.pad(x, (0, n_fft - len(x)))
     n_frames = 1 + (len(x) - n_fft) // hop
     frames = np.lib.stride_tricks.sliding_window_view(x, n_fft)[::hop]
     return np.ascontiguousarray(frames[:n_frames])
-
-
-def stft(
-    x: np.ndarray, n_fft: int = 512, hop: int = 128, center: bool = True
-) -> np.ndarray:
-    """One-sided STFT ``(n_frames, n_fft//2 + 1)`` complex128.
-
-    Hann-windowed, unnormalized — the ``torch.stft(normalized=False,
-    onesided=True, center=True)`` contract of
-    ``modules/models/separate_fast.py:64-70``.
-    """
-    frames = frame_signal(x, n_fft, hop, center)
-    return np.fft.rfft(frames * hann(n_fft), axis=1)
-
-
-def istft(
-    S: np.ndarray,
-    n_fft: int = 512,
-    hop: int = 128,
-    center: bool = True,
-    length: int | None = None,
-) -> np.ndarray:
-    """Inverse STFT via windowed overlap-add with window-square
-    normalization (COLA), matching ``torch.istft``
-    (``modules/models/separate_fast.py:103-106``).
-    """
-    S = np.asarray(S)
-    w = hann(n_fft)
-    frames = np.fft.irfft(S, n=n_fft, axis=1) * w
-    n = n_fft + hop * (len(S) - 1)
-    out = np.zeros(n)
-    wsq = np.zeros(n)
-    for i in range(len(S)):
-        out[i * hop : i * hop + n_fft] += frames[i]
-        wsq[i * hop : i * hop + n_fft] += w * w
-    out = out / np.maximum(wsq, 1e-12)
-    if center:
-        # trim the reflect padding from BOTH ends (torch.istft contract);
-        # an explicit `length` below re-trims/pads as requested
-        out = out[n_fft // 2 : len(out) - n_fft // 2 if length is None else None]
-    if length is not None:
-        out = out[:length] if len(out) >= length else np.pad(out, (0, length - len(out)))
-    return out
-
-
-def _hz_to_mel(f: np.ndarray) -> np.ndarray:
-    """Slaney mel scale: linear below 1 kHz, logarithmic above."""
-    f = np.asarray(f, dtype=np.float64)
-    linear = f / (200.0 / 3.0)
-    log_step = np.log(6.4) / 27.0
-    return np.where(f >= 1000.0, 15.0 + np.log(np.maximum(f, 1e-12) / 1000.0) / log_step, linear)
-
-
-def _mel_to_hz(m: np.ndarray) -> np.ndarray:
-    m = np.asarray(m, dtype=np.float64)
-    linear = m * (200.0 / 3.0)
-    log_step = np.log(6.4) / 27.0
-    return np.where(m >= 15.0, 1000.0 * np.exp(log_step * (m - 15.0)), linear)
-
-
-import functools
-
-
-@functools.lru_cache(maxsize=64)
-def mel_filterbank(
-    sr: int, n_fft: int, n_mels: int, fmin: float = 0.0, fmax: float | None = None
-) -> np.ndarray:
-    """Triangular Slaney-normalized mel filterbank
-    ``(n_mels, n_fft//2 + 1)`` — librosa's default contract
-    (``htk=False, norm='slaney'``), the matrix behind
-    ``modules/models/dnsmos.py:71-74``.
-    """
-    fmax = fmax if fmax is not None else sr / 2.0
-    mel_pts = np.linspace(_hz_to_mel(fmin), _hz_to_mel(fmax), n_mels + 2)
-    hz_pts = _mel_to_hz(mel_pts)
-    fft_freqs = np.fft.rfftfreq(n_fft, d=1.0 / sr)
-    weights = np.zeros((n_mels, len(fft_freqs)))
-    for i in range(n_mels):
-        lo, mid, hi = hz_pts[i], hz_pts[i + 1], hz_pts[i + 2]
-        up = (fft_freqs - lo) / max(mid - lo, 1e-12)
-        down = (hi - fft_freqs) / max(hi - mid, 1e-12)
-        tri = np.maximum(0.0, np.minimum(up, down))
-        weights[i] = tri * (2.0 / max(hi - lo, 1e-12))  # Slaney norm
-    return weights
-
-
-def melspectrogram(
-    x: np.ndarray,
-    sr: int = 16000,
-    n_fft: int = 321,
-    hop: int = 160,
-    n_mels: int = 120,
-    power: float = 2.0,
-) -> np.ndarray:
-    """Mel power spectrogram ``(n_frames, n_mels)``.
-
-    Defaults mirror ``modules/models/dnsmos.py:54-57``
-    (``n_fft=frame_size+1=321, hop_length=160, n_mels=120``).
-    """
-    spec = np.abs(stft(x, n_fft=n_fft, hop=hop)) ** power
-    return spec @ mel_filterbank(sr, n_fft, n_mels).T
-
-
-def power_to_db(
-    S: np.ndarray,
-    ref: float | None = None,
-    amin: float = 1e-10,
-    top_db: float | None = 80.0,
-) -> np.ndarray:
-    """``10*log10(S/ref)`` clamped to ``top_db`` below peak — the
-    librosa ``power_to_db(ref=np.max)`` used at
-    ``modules/models/dnsmos.py:75``.
-    """
-    S = np.asarray(S, dtype=np.float64)
-    ref_val = float(np.max(S)) if ref is None else float(ref)
-    db = 10.0 * np.log10(np.maximum(amin, S))
-    db -= 10.0 * np.log10(max(amin, ref_val))
-    if top_db is not None:
-        db = np.maximum(db, db.max() - top_db)
-    return db
 
 
 def resample(x: np.ndarray, orig_sr: int, target_sr: int) -> np.ndarray:
@@ -213,54 +66,3 @@ def resample(x: np.ndarray, orig_sr: int, target_sr: int) -> np.ndarray:
         # Nyquist bin splits across +-n/2 in the wider spectrum
         Y[k - 1] = 0.5 * Y[k - 1]
     return np.fft.irfft(Y, n=m) * (m / n)
-
-
-@functools.lru_cache(maxsize=64)
-def dct2_ortho(n_out: int, n_in: int) -> np.ndarray:
-    """Orthonormal DCT-II basis ``(n_out, n_in)`` — scipy's
-    ``dct(type=2, norm='ortho')`` matrix, written out so the MFCC path
-    needs no scipy: ``D[k, n] = s_k * cos(pi*k*(2n+1)/(2N))`` with
-    ``s_0 = sqrt(1/N)``, ``s_k = sqrt(2/N)``. Cached (per-row kernel
-    callers); treat the returned array as read-only.
-    """
-    n = np.arange(n_in, dtype=np.float64)
-    k = np.arange(n_out, dtype=np.float64)[:, None]
-    basis = np.cos(np.pi * k * (2.0 * n + 1.0) / (2.0 * n_in))
-    basis *= np.sqrt(2.0 / n_in)
-    basis[0] *= np.sqrt(0.5)
-    return basis
-
-
-def mfcc(
-    x: np.ndarray,
-    sr: int = 16000,
-    n_mfcc: int = 13,
-    n_fft: int = 512,
-    hop: int = 160,
-    n_mels: int = 40,
-) -> np.ndarray:
-    """MFCCs ``(n_frames, n_mfcc)``: DCT-II (ortho) over the dB-scaled
-    mel power spectrogram — librosa's ``feature.mfcc`` contract
-    (which the reference's model stack would consume where it feeds
-    waveform features to scoring models, cf. the mel pipeline at
-    modules/models/dnsmos.py:54-76).
-    """
-    m = melspectrogram(x, sr=sr, n_fft=n_fft, hop=hop, n_mels=n_mels)
-    log_m = power_to_db(m, ref=1.0, top_db=None)
-    return log_m @ dct2_ortho(n_mfcc, n_mels).T
-
-
-def delta(feats: np.ndarray, width: int = 9) -> np.ndarray:
-    """Delta (first-order regression) features over time, librosa's
-    Savitzky-Golay-free classic form: least-squares slope over a
-    ±(width//2) frame window with edge replication.
-    """
-    feats = np.asarray(feats, dtype=np.float64)
-    half = width // 2
-    denom = 2.0 * sum(i * i for i in range(1, half + 1))
-    padded = np.pad(feats, ((half, half), (0, 0)), mode="edge")
-    out = np.zeros_like(feats)
-    for i in range(1, half + 1):
-        out += i * (padded[half + i:half + i + len(feats)]
-                    - padded[half - i:half - i + len(feats)])
-    return out / denom

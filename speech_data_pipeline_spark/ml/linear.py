@@ -113,20 +113,3 @@ def perceptron_train(
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
-
-
-def perceptron_score(
-    df: DataFrame,
-    weights: dict[str, int],
-    bias: int,
-    feat_cols: list[str],
-) -> DataFrame:
-    """Apply a trained integer perceptron: adds ``p_score`` (the exact
-    bigint margin numerator w·x + b) and ``p_pred`` (+1/-1). Map-only."""
-    score = (
-        sum(F.col(c).cast("long") * F.lit(int(weights[c])) for c in feat_cols)
-        + F.lit(int(bias))
-    )
-    return df.withColumn("p_score", score.cast("long")).withColumn(
-        "p_pred", F.when(score > 0, 1).otherwise(-1)
-    )

@@ -7,8 +7,22 @@ Modules:
                     speaker-aware kernels, barrier sessionization (W1, W2, W9)
 - ``sweepline``   — sweep-line overlap flattening (W3)
 - ``windows``     — sliding-window explode (W4/W5), budgeted accumulation (A12)
+- ``splitting``   — recursive longest-gap splitting (W8)
+- ``classify``    — the silence classifier (F2)
 - ``dedup``       — exact / minhash-LSH / simhash / n-gram-Jaccard dedup
+- ``graph``       — connected components and graph analytics
 - ``similarity``  — embedding cosine top-k, LSH-bucketed ANN
-- ``text``        — token counting, quality scoring, language-ID, fingerprints
-- ``multimodal``  — opaque binary columns + stubbed decode/feature plumbing
+- ``sketches``    — Bloom-filter membership
+- ``text``        — quality scoring, language-ID, fingerprints
+- ``packing``     — greedy sequence packing
+- ``calibration`` — isotonic calibration
+- ``recurrence``  — per-key EWMA and CUSUM recurrences
+- ``skew``        — salted two-phase aggregation
+- ``spectral``    — per-frame FFT energy
+- ``multimodal``  — binary media payloads: WAV decode, waveform chunking
+                    and segment slicing, frame sampling, image resize
+- ``flac``, ``mpegaudio``, ``vorbis``, ``mediainfo`` — pure-NumPy audio
+                    codecs and header probes behind ``multimodal``'s decode
+- ``png``, ``gif``, ``jpeg``, ``webp`` — pure-NumPy image codecs behind
+                    ``multimodal.decode_image_bytes``
 """

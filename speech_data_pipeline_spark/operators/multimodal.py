@@ -3,9 +3,9 @@
 Design (SURVEY.md §1.1 waveform row + known-hard #5): media lives in a
 ``binary`` column with sibling metadata columns; decode/feature steps
 are Arrow-batched ``mapInPandas`` stages so bytes stream executor-side
-in bounded batches and never concentrate on the driver. Long payloads
-are chunked ``(media_id, chunk_idx, payload)`` at ingest — the W6
-pattern — and reassembled ordered via ``collect_list(struct(...))``.
+in bounded batches and never concentrate on the driver. Long waveforms
+are chunked ``(audio_id, chunk_idx, chunk)`` — the W6 pattern
+(:func:`chunk_waveforms`).
 
 Audio decode is REAL for every container the repo can verify without
 external codecs: RIFF/WAV (PCM 8-32, IEEE float, G.711 μ-law/A-law,
@@ -17,8 +17,8 @@ baseline JPEG, WebP-VP8L — :func:`decode_image_bytes`). The remaining
 clearly-marked seams are MPEG Layer III spectral Huffman (ISO tabular
 data underivable offline), ogg/m4a/aac, and lossy-VP8 WebP
 (NotImplementedError, deterministic fake behind ``fake=True``); the
-Spark-side plumbing — schema, batch iteration, chunking, reassembly —
-is real and tested either way.
+Spark-side plumbing — schema, batch iteration, chunking — is real and
+tested either way.
 """
 
 from __future__ import annotations
@@ -75,46 +75,6 @@ def extract_features(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(kernel, schema=FEATURE_SCHEMA)
-
-
-def chunk_payload(df: DataFrame, chunk_bytes: int = 1 << 20) -> DataFrame:
-    """Split payloads into bounded chunks (W6 pattern): long media must
-    be chunked at ingest to stay under Arrow/row limits (a 3-hour
-    44.1 kHz stereo file is ~1.9 GB — over the 2 GB row ceiling)."""
-    n_chunks = F.greatest(
-        F.ceil(F.length("payload") / F.lit(chunk_bytes)).cast("long"), F.lit(1).cast("long")
-    )
-    return (
-        df.withColumn("_n", n_chunks)
-        .withColumn("chunk_idx", F.explode(F.sequence(F.lit(0).cast("long"), F.col("_n") - 1)))
-        .select(
-            "media_id",
-            "chunk_idx",
-            F.expr(f"substring(payload, chunk_idx * {chunk_bytes} + 1, {chunk_bytes})").alias(
-                "chunk"
-            ),
-        )
-    )
-
-
-def reassemble_payload(chunks: DataFrame) -> DataFrame:
-    """Ordered chunk reassembly: collect_list(struct) + array_sort + concat."""
-    return (
-        chunks.groupBy("media_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("chunk_idx", "chunk"))
-            ).alias("parts")
-        )
-        .select(
-            "media_id",
-            F.aggregate(
-                F.col("parts"),
-                F.lit(b""),
-                lambda acc, p: F.concat(acc, p["chunk"]),
-            ).alias("payload"),
-        )
-    )
 
 
 #: Default waveform chunk length in SAMPLES (~32 MB of doubles): far

@@ -1,20 +1,13 @@
 """Skew mitigation utilities (SCALE.md "Skew and blow-up bounds").
 
 AQE's skew-join splitting handles most runtime skew; these helpers
-cover the two shapes AQE cannot:
+cover the shape AQE cannot:
 
 - ``salted_aggregate`` — two-phase aggregation for hot grouping keys:
   partial-aggregate on ``(key, salt)`` (spreads one hot key over
   ``n_salts`` reducers), then final-aggregate on ``key``. Correct for
   any algebraic aggregate supplied as (partial, merge) column pairs;
   the common sum/count/min/max forms are provided.
-
-- ``salted_broadcast_join`` — replicate-and-salt for joining a skewed
-  large side against a small side that is broadcastable: the small
-  side is exploded ``n_salts``× with a salt column, the large side
-  gets a random-but-deterministic salt from a hash of its row, and the
-  join key becomes ``(key, salt)``. Row-hash salting keeps retries
-  deterministic (no rand()).
 """
 
 from __future__ import annotations
@@ -55,26 +48,3 @@ def salted_aggregate(
     if counts:
         final_aggs.append(F.sum("_p_n").cast("long").alias("n"))
     return partial.groupBy(key).agg(*final_aggs)
-
-
-def salted_broadcast_join(
-    large: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int,
-    large_salt_cols: list[str],
-) -> DataFrame:
-    """Join a skew-keyed large side to a broadcastable small side.
-
-    The small side replicates ``n_salts``×; the large side salts by row
-    hash; joining on ``(key, _salt)`` splits a hot key's rows across
-    tasks. Only correct for inner/left joins where ``small`` is unique
-    per key (the replication would duplicate otherwise).
-    """
-    salted_large = with_salt(large, n_salts, large_salt_cols)
-    replicated = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return salted_large.join(
-        F.broadcast(replicated), [key, "_salt"], "inner"
-    ).drop("_salt")

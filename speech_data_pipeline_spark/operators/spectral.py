@@ -1,21 +1,11 @@
-"""Spectral DataFrame operators: X11 resample, X12 mel features, X13
-STFT-domain separation — Arrow-batched wrappers over the pure-NumPy DSP
-core in :mod:`speech_data_pipeline_spark.ml.dsp`.
+"""Spectral DataFrame operator: per-frame FFT energy, an Arrow-batched
+wrapper over the pure-NumPy DSP core in
+:mod:`speech_data_pipeline_spark.ml.dsp`.
 
-These are per-row array transforms with no cross-row state, so each is
-one ``mapInPandas`` pass: no shuffle, embarrassingly parallel, and the
-scan's column pruning still applies (each kernel asks only for the
-columns it needs). At 100 TB the operator cost is pure map work —
-partition sizing is governed by waveform bytes per row, which the
-chunked representation (operators/multimodal.py) bounds.
-
-Reference sites re-expressed here:
-- resample: modules/models/dnsmos.py:126, modules/models/silero_vad.py:161
-- mel features: modules/models/dnsmos.py:54-76
-- STFT mask separation: modules/models/separate_fast.py:53-106, 220-235
-  (STFT → per-bin mask → iSTFT; the model mask is replaced by a
-  deterministic magnitude gate — the *transform pipeline* is real, the
-  learned mask is the documented model seam).
+It is a per-row array transform with no cross-row state, so it is one
+``mapInPandas`` pass: no shuffle, embarrassingly parallel, and the
+scan's column pruning still applies (the kernel asks only for the
+columns it needs).
 """
 
 from __future__ import annotations
@@ -27,131 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from speech_data_pipeline_spark.ml import dsp
-
-
-def resample_waveforms(
-    df: DataFrame,
-    target_sr: int,
-    samples_col: str = "samples",
-    sr_col: str = "sr",
-) -> DataFrame:
-    """X11: band-limited resample of every waveform to ``target_sr``.
-
-    Rows already at ``target_sr`` pass through untouched (the reference
-    guards the same way, modules/models/dnsmos.py:125). Output schema ==
-    input schema with ``samples`` replaced and ``sr`` set to
-    ``target_sr``.
-    """
-    schema = df.schema
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_samples = []
-            for samples, sr in zip(pdf[samples_col], pdf[sr_col]):
-                y = dsp.resample(np.asarray(samples, dtype=np.float64), int(sr), target_sr)
-                out_samples.append(y.tolist())
-            pdf = pdf.copy()
-            pdf[samples_col] = out_samples
-            pdf[sr_col] = target_sr
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=schema)
-
-
-MEL_SCHEMA = (
-    "audio_id string, frame_idx int, mel_db array<double>, mel_mean_db double"
-)
-
-
-def mel_features(
-    df: DataFrame,
-    n_fft: int = 321,
-    hop: int = 160,
-    n_mels: int = 120,
-    samples_col: str = "samples",
-    sr_col: str = "sr",
-) -> DataFrame:
-    """X12: per-frame mel-spectrogram features (dB-scaled as the
-    DNSMOS preprocessor does: ``(power_to_db(ref=max) + 40) / 40``,
-    modules/models/dnsmos.py:75).
-
-    1→N: each waveform row explodes into its frames. Downstream model
-    scoring consumes ``mel_db``; ``mel_mean_db`` is the per-frame
-    scalar summary used by the quality heuristics.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, samples, sr in zip(pdf["audio_id"], pdf[samples_col], pdf[sr_col]):
-                x = np.asarray(samples, dtype=np.float64)
-                if len(x) == 0:
-                    continue
-                m = dsp.melspectrogram(x, sr=int(sr), n_fft=n_fft, hop=hop, n_mels=n_mels)
-                m_db = (dsp.power_to_db(m) + 40.0) / 40.0
-                for i in range(m_db.shape[0]):
-                    rows.append(
-                        (aid, i, m_db[i].tolist(), float(np.mean(m_db[i])))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "frame_idx", "mel_db", "mel_mean_db"]
-            )
-
-    return df.mapInPandas(kernel, schema=MEL_SCHEMA)
-
-
-def spectral_gate_separate(
-    df: DataFrame,
-    n_fft: int = 512,
-    hop: int = 128,
-    gate_quantile: float = 0.5,
-    samples_col: str = "samples",
-) -> DataFrame:
-    """X13: STFT-domain separation — the real transform pipeline of
-    modules/models/separate_fast.py:220-235 (STFT → mask → iSTFT) with
-    a deterministic mask: bins whose magnitude is above the frame's
-    ``gate_quantile`` go to ``vocal``, the rest to ``nonvocal``.
-
-    The learned MDX mask is the documented model seam; everything
-    Spark-side (windowing, rfft, complementary masks, COLA overlap-add
-    reconstruction, length restore) is the genuine article. The two
-    outputs reconstruct to the input up to COLA error: vocal + nonvocal
-    ≈ original.
-    """
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    schema = StructType(
-        [f for f in df.schema.fields]
-        + [
-            StructField("vocal", ArrayType(DoubleType())),
-            StructField("nonvocal", ArrayType(DoubleType())),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            voc, nvoc = [], []
-            for samples in pdf[samples_col]:
-                x = np.asarray(samples, dtype=np.float64)
-                n = len(x)
-                if n == 0:
-                    voc.append([])
-                    nvoc.append([])
-                    continue
-                S = dsp.stft(x, n_fft=n_fft, hop=hop)
-                mag = np.abs(S)
-                thresh = np.quantile(mag, gate_quantile, axis=1, keepdims=True)
-                mask = mag >= thresh
-                v = dsp.istft(np.where(mask, S, 0.0), n_fft=n_fft, hop=hop, length=n)
-                nv = dsp.istft(np.where(mask, 0.0, S), n_fft=n_fft, hop=hop, length=n)
-                voc.append(v.tolist())
-                nvoc.append(nv.tolist())
-            pdf = pdf.copy()
-            pdf["vocal"] = voc
-            pdf["nonvocal"] = nvoc
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=schema)
 
 
 FRAME_ENERGY_SCHEMA = "vec_id bigint, frame_idx int, frame_energy double"
@@ -182,7 +47,7 @@ def stft_frame_energy(
                 x = np.asarray(vec, dtype=np.float64)
                 if len(x) < n_fft:
                     continue
-                frames = dsp.frame_signal(x, n_fft, hop, center=False)
+                frames = dsp.frame_signal(x, n_fft, hop)
                 S = np.fft.rfft(frames * w, axis=1)
                 p = np.abs(S) ** 2
                 if n_fft % 2 == 0:  # last bin is the (unpaired) Nyquist bin
@@ -198,110 +63,3 @@ def stft_frame_energy(
 
     return df.mapInPandas(kernel, schema=FRAME_ENERGY_SCHEMA)
 
-
-VAD_SEG_SCHEMA = "audio_id string, start double, end double"
-
-
-def vad_frame_energy(
-    df: DataFrame,
-    n_fft: int = 512,
-    hop: int = 160,
-    threshold_db: float = -35.0,
-    hangover_frames: int = 5,
-    min_dur: float = 0.05,
-) -> DataFrame:
-    """Classical frame-energy VAD on the real STFT — the standard
-    signal-processing baseline for the reference's Silero stage (M1,
-    modules/vad_multi.py:21-46): per-frame log energy from
-    :func:`ml.dsp.stft`, a frames-active threshold relative to the
-    file's peak frame (``threshold_db`` below it), hangover smoothing
-    (speech stays active ``hangover_frames`` past the last hot frame —
-    the classic VAD trick that bridges intra-word gaps), then runs →
-    (start, end) seconds with a minimum duration.
-
-    Real DSP end to end (the learned-model seam stays in ml/stubs.py);
-    per-row kernel, no shuffle, vectorized — frame energies are one
-    |STFT|² reduction, runs come from ``np.diff`` on the active mask,
-    no per-sample Python.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, samples, sr in zip(
-                pdf["audio_id"], pdf["samples"], pdf["sr"]
-            ):
-                x = np.asarray(samples, dtype=np.float64)
-                if len(x) < n_fft:
-                    continue
-                spec = dsp.stft(x, n_fft=n_fft, hop=hop)  # (frames, bins)
-                energy = (np.abs(spec) ** 2).sum(axis=1)
-                if not np.any(energy > 0):
-                    continue
-                edb = 10.0 * np.log10(np.maximum(energy, 1e-30))
-                active = edb > (edb.max() + threshold_db)
-                if hangover_frames > 0 and active.any():
-                    # extend each active frame forward by the hangover
-                    idx = np.nonzero(active)[0]
-                    for k in range(1, hangover_frames + 1):
-                        ext = idx + k
-                        active[ext[ext < len(active)]] = True
-                padded = np.concatenate(([False], active, [False]))
-                d = np.diff(padded.astype(np.int8))
-                starts = np.nonzero(d == 1)[0]
-                ends = np.nonzero(d == -1)[0]
-                for s, e in zip(starts, ends):
-                    # center=True: frame f is centered at f*hop samples
-                    t0 = max(0, s * hop - n_fft // 2) / sr
-                    t1 = min((e - 1) * hop + n_fft // 2, len(x)) / sr
-                    if t1 - t0 >= min_dur:
-                        rows.append((aid, t0, t1))
-            yield pd.DataFrame(rows, columns=["audio_id", "start", "end"])
-
-    return df.mapInPandas(kernel, schema=VAD_SEG_SCHEMA)
-
-
-MFCC_SCHEMA = (
-    "audio_id string, frame_idx int, mfcc array<double>, d_mfcc array<double>"
-)
-
-
-def mfcc_features(
-    df: DataFrame,
-    n_mfcc: int = 13,
-    n_fft: int = 512,
-    hop: int = 160,
-    n_mels: int = 40,
-    samples_col: str = "samples",
-    sr_col: str = "sr",
-) -> DataFrame:
-    """Per-frame MFCC + delta features, 1→N exploded like
-    :func:`mel_features` — the classic ASR front-end the reference's
-    model stages would consume in place of raw mel (cf. the mel
-    pipeline at modules/models/dnsmos.py:54-76).
-
-    Arrow-batched ``mapInPandas``: one Python call per batch; each
-    waveform's frames are computed with the pure-NumPy DSP kernels
-    (ml/dsp.py stft → mel → dct2_ortho → delta), so the operator ships
-    no model or codec dependency.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, samples, sr in zip(pdf["audio_id"], pdf[samples_col], pdf[sr_col]):
-                x = np.asarray(samples, dtype=np.float64)
-                if len(x) < n_fft:
-                    continue
-                feats = dsp.mfcc(
-                    x, sr=int(sr), n_mfcc=n_mfcc, n_fft=n_fft, hop=hop,
-                    n_mels=n_mels,
-                )
-                d = dsp.delta(feats)
-                for i in range(feats.shape[0]):
-                    rows.append((aid, i, feats[i].tolist(), d[i].tolist()))
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "frame_idx", "mfcc", "d_mfcc"]
-            )
-
-    return df.mapInPandas(kernel, schema=MFCC_SCHEMA)

@@ -2,8 +2,8 @@
 
 Large-scale training-data-pipeline surface (the transcript-processing
 analog of the reference's stage 5 text outputs,
-modules/models/whisper_asr.py:171-178): token counting, quality
-scoring, language identification, document fingerprinting.
+modules/models/whisper_asr.py:171-178): quality scoring, language
+identification, document fingerprinting.
 
 Everything here is built-in-function column algebra — JVM-side,
 whole-stage codegen, no Python in the hot path. Each function takes and
@@ -116,20 +116,6 @@ def url_normalize(url: Column) -> Column:
     rest = F.when(rest == "", F.lit("/")).otherwise(rest)
     rest = F.regexp_replace(rest, r"(.)/$", "$1")
     return F.concat(scheme, F.lit("://"), host, rest)
-
-
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace token count plus a BPE-ish subword estimate.
-
-    The subword estimate counts runs of word characters and single
-    non-word non-space characters — a deterministic stand-in for a BPE
-    tokenizer's piece count (chars/4 heuristic also provided).
-    """
-    t = F.col(text_col)
-    return df.withColumn("n_tokens", F.size(tokens(t))).withColumn(
-        "n_subwords",
-        F.size(F.regexp_extract_all(t, F.lit(SUBWORD_PAT), 0)),
-    ).withColumn("n_tokens_approx", (F.length(t) / F.lit(4.0)).cast("long"))
 
 
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -538,97 +524,6 @@ def tfidf_topk(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
             trunc6(score).alias("score"),
             F.col("rnk").cast("long").alias("rnk"),
         )
-    )
-
-
-def cdc_chunks_bounded(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-    base: int = 31,
-    mod: int = 64,
-    min_len: int = 32,
-    max_len: int = 128,
-) -> DataFrame:
-    """Bounded content-defined chunking — the production CDC variant.
-
-    Like the stateless anchor form (queries/curation_q.dedup_cdc_chunks)
-    but with chunk-length bounds: the next boundary is the first anchor
-    at least ``min_len`` past the previous boundary, forced at
-    ``max_len`` if no anchor appears. Bounds make the boundary choice
-    sequential (each depends on the previous), so this runs per
-    document inside ``mapInPandas`` — documents are independent rows,
-    no key grouping needed, one Python call per Arrow batch. Window
-    hashes are one vectorized correlation per document.
-
-    Returns ``(id, chunk_idx, chunk_len, chunk_hash)``.
-    """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    pows = np.array(
-        [base ** (window - 1 - j) for j in range(window)], dtype=np.int64
-    )
-
-    def chunk_one(text: str) -> list[tuple[int, int, str]]:
-        if text is None:  # NULL text: no chunks, never a task crash
-            return []
-        n = len(text)
-        if n == 0:
-            return []
-        codes = np.frombuffer(text.encode("utf-8", "replace"), dtype=np.uint8)
-        n = len(codes)
-        if n < window:
-            anchors = np.empty(0, dtype=np.int64)
-        else:
-            wins = np.lib.stride_tricks.sliding_window_view(
-                codes.astype(np.int64), window
-            )
-            hashes = wins @ pows
-            # anchor AFTER position i (1-based end of the window)
-            anchors = np.flatnonzero(hashes % mod == 0) + window
-        out = []
-        cur = 0
-        ai = 0
-        while cur < n:
-            lo, hi = cur + min_len, cur + max_len
-            while ai < len(anchors) and anchors[ai] < lo:
-                ai += 1
-            if ai < len(anchors) and anchors[ai] <= hi:
-                nxt = int(anchors[ai])
-                ai += 1
-            else:
-                nxt = min(hi, n)
-            piece = codes[cur:nxt].tobytes()
-            out.append(
-                (len(out), nxt - cur, hashlib.md5(piece).hexdigest())
-            )
-            cur = nxt
-        return out
-
-    def run(batches):
-        for pdf in batches:
-            ids, idxs, lens, hashes = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                for idx, ln, h in chunk_one(t):
-                    ids.append(i)
-                    idxs.append(idx)
-                    lens.append(ln)
-                    hashes.append(h)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "chunk_idx": pd.Series(idxs, dtype="int64"),
-                    "chunk_len": pd.Series(lens, dtype="int64"),
-                    "chunk_hash": pd.Series(hashes, dtype="object"),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} long, chunk_idx long, chunk_len long, chunk_hash string"
     )
 
 

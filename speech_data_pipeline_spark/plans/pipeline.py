@@ -48,12 +48,16 @@ def run_pipeline(
     def path(stage: str) -> str:
         return os.path.join(workdir, stage)
 
+    def upstream(stage: str) -> DataFrame:
+        # Read the stage's table only when this call did not run it.
+        return out[stage] if stage in out else _load(spark, path(stage))
+
     if "vad" in stages:
         out["vad"] = run_incremental_stage(
             spark, audio, lambda a: st.vad_stage(a, **conf.get("vad", {})), path("vad")
         )
     if "separation" in stages:
-        vad = out.get("vad", _load(spark, path("vad")))
+        vad = upstream("vad")
 
         def sep(todo_audio: DataFrame) -> DataFrame:
             scored, gaps = st.separation_stage(todo_audio, vad.join(
@@ -70,7 +74,7 @@ def run_pipeline(
 
         out["separation"] = run_incremental_stage(spark, audio, sep, path("separation"))
     if "diarization" in stages:
-        sep_tbl = out.get("separation", _load(spark, path("separation")))
+        sep_tbl = upstream("separation")
 
         def diar(todo_audio: DataFrame) -> DataFrame:
             mine = sep_tbl.join(todo_audio.select("audio_id").distinct(), "audio_id")
@@ -91,7 +95,7 @@ def run_pipeline(
 
         out["diarization"] = run_incremental_stage(spark, audio, diar, path("diarization"))
     if "rematch" in stages:
-        diar_tbl = out.get("diarization", _load(spark, path("diarization")))
+        diar_tbl = upstream("diarization")
 
         def rematch(todo_audio: DataFrame) -> DataFrame:
             single = (
@@ -105,7 +109,7 @@ def run_pipeline(
             return merged
         out["rematch"] = run_incremental_stage(spark, audio, rematch, path("rematch"))
     if "host_match" in stages and hosts is not None:
-        rem_tbl = out.get("rematch", _load(spark, path("rematch")))
+        rem_tbl = upstream("rematch")
 
         def match(todo_audio: DataFrame) -> DataFrame:
             mine = rem_tbl.join(todo_audio.select("audio_id").distinct(), "audio_id")

@@ -359,8 +359,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order-function lambdas interpreted, per element, outside
     whole-stage codegen. The oracle still replays the pure-SQL spec
     (`_cdc_pred`), so the kernel's hash convention is pinned
-    cross-engine. Production CDC adds min/max chunk bounds — that
-    sequential variant is `cdc_chunks_bounded`.
+    cross-engine.
     """
     from pyspark.sql import Window
 

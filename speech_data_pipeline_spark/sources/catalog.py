@@ -77,12 +77,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every catalog table as a temp view for ``spark.sql``."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def derived_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical segment table derived from `events`.
 

@@ -165,10 +165,8 @@ class WavMetaStreamReader(SimpleDataSourceStreamReader):
     O(1) state regardless of history, exactly replayable (``read``
     from a committed offset re-lists deterministically, and
     ``readBetweenOffsets`` re-derives any batch from its bounds). The
-    contract this buys is the one the training-shard sink already
-    guarantees for its own output (sources/shardsink.py): landing
-    files arrive with monotonically increasing names
-    (``part-00001…``, timestamped uploads). A file sorting BELOW the
+    contract this needs: landing files arrive with monotonically
+    increasing names (``part-00001…``, timestamped uploads). A file sorting BELOW the
     cursor is ignored by construction — the same append-only
     assumption Spark's file stream source makes, but with bounded
     offset state instead of its seen-files log.

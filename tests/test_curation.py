@@ -149,48 +149,6 @@ def test_cdc_chunks_detect_shared_passage_after_insertion(spark):
     assert out[1].n_chunks > 2  # anchors actually split the passage
 
 
-def test_cdc_bounded_chunks_partition_and_bounds(spark):
-    """Bounded CDC: chunks partition the byte stream, lengths sit in
-    [min_len, max_len] (except a shorter final chunk), and the shared
-    tail of an edited copy still produces common chunk hashes."""
-    import random
-
-    random.seed(7)
-    passage = " ".join(
-        "".join(random.choice("abcdefgh") for _ in range(5)) for _ in range(200)
-    )
-    rows = [(1, "short head " + passage), (2, "a much longer different head " + passage)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = tx.cdc_chunks_bounded(df, min_len=32, max_len=128)
-    rowsc = out.collect()
-    by_doc = {}
-    for r in rowsc:
-        by_doc.setdefault(r.doc_id, []).append((r.chunk_idx, r.chunk_len, r.chunk_hash))
-    for doc_id, (_, text) in zip((1, 2), rows):
-        chunks = sorted(by_doc[doc_id])
-        assert [c[0] for c in chunks] == list(range(len(chunks)))
-        assert sum(c[1] for c in chunks) == len(text.encode())  # partition
-        for _, ln, _ in chunks[:-1]:
-            assert 32 <= ln <= 128
-        assert chunks[-1][1] <= 128
-    shared = set(h for _, _, h in by_doc[1]) & set(h for _, _, h in by_doc[2])
-    assert shared  # boundaries realigned on the common tail
-
-
-def test_cdc_bounded_empty_and_tiny(spark):
-    df = spark.createDataFrame(
-        [(1, ""), (2, "tiny"), (3, "x" * 200)], "doc_id long, text string"
-    )
-    out = tx.cdc_chunks_bounded(df, min_len=32, max_len=64)
-    by_doc = {}
-    for r in out.collect():
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert 1 not in by_doc  # empty doc -> no chunks
-    assert len(by_doc[2]) == 1 and by_doc[2][0].chunk_len == 4
-    assert all(r.chunk_len <= 64 for r in by_doc[3])
-    assert sum(r.chunk_len for r in by_doc[3]) == 200
-
-
 def test_count_min_never_underestimates(spark):
     """CMS invariant: every estimate >= exact count, and heavy hitters
     on this corpus estimate exactly (collisions only inflate)."""

@@ -77,17 +77,3 @@ def test_perceptron_matches_driver_replay(spark):
         w0, w1, bb = w0 + d0, w1 + d1, bb + db
         expect.append((t, n, w0, w1, bb))
     assert got == expect
-
-
-def test_perceptron_score_is_map_only(spark):
-    from speech_data_pipeline_spark.ml.linear import perceptron_score
-
-    _, df = _fixture(spark)
-    scored = perceptron_score(df, {"f0": 3, "f1": -3}, -1, ["f0", "f1"])
-    rows_ = scored.collect()
-    for r in rows_:
-        assert r["p_score"] == 3 * r["f0"] - 3 * r["f1"] - 1
-        assert r["p_pred"] == (1 if r["p_score"] > 0 else -1)
-    # no exchange in the plan: scoring must stay inside the scan stage
-    plan = scored._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan

@@ -1,4 +1,4 @@
-"""WAV decode seam + payload chunking (SURVEY.md §2.1 S2-S5 decode).
+"""WAV decode seam + waveform chunking (SURVEY.md §2.1 S2-S5 decode).
 
 The real decoder covers uncompressed RIFF/WAV (PCM 8/16/24/32-bit and
 IEEE float) with pure NumPy — the one media format the engine can decode
@@ -16,11 +16,9 @@ from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.operators.multimodal import (
     attach_sliced_samples,
-    chunk_payload,
     chunk_waveforms,
     decode_media,
     decode_wav_bytes,
-    reassemble_payload,
 )
 
 
@@ -124,16 +122,6 @@ def test_decode_media_through_vad_stage(spark):
     assert "1" in ids and "2" not in ids
     for r in vad:
         assert r.end > r.start >= 0
-
-
-def test_chunk_reassemble_payload_roundtrip(spark):
-    rows = [(1, b"a" * 100), (2, b"xyz"), (3, b"")]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    back = {
-        r.media_id: bytes(r.payload)
-        for r in reassemble_payload(chunk_payload(df, chunk_bytes=7)).collect()
-    }
-    assert back == {1: b"a" * 100, 2: b"xyz", 3: b""}
 
 
 def test_chunked_waveform_slice_edges(spark):
@@ -273,36 +261,6 @@ def test_resize_frames_shape_and_determinism(spark):
     assert all(p == 0.0 for p in out[2].pixels)  # zero payload -> zeros
     again = {r.media_id: r for r in resize_frames(df, out_h=4, out_w=4).collect()}
     assert again[1].pixels == out[1].pixels
-
-
-def test_decode_media_through_mfcc(spark):
-    """WAV bytes → decode_media → mfcc_features: the decoded column
-    feeds the ASR front-end directly, and the operator's coefficients
-    match the NumPy kernel on the decoded samples."""
-    import numpy as np
-
-    from speech_data_pipeline_spark.ml import dsp
-    from speech_data_pipeline_spark.operators.multimodal import decode_media
-    from speech_data_pipeline_spark.operators.spectral import mfcc_features
-
-    sr = 16000
-    x = tone(sr, freq=440.0, sr=sr, amp=0.5)
-    payloads = spark.createDataFrame(
-        [(7, bytearray(make_wav(x, sr=sr)))], "media_id long, payload binary"
-    )
-    audio = decode_media(payloads).select(
-        F.col("media_id").cast("string").alias("audio_id"), "samples", "sr"
-    )
-    out = mfcc_features(audio, n_mfcc=13, n_fft=512, hop=256, n_mels=40)
-    rows = sorted(out.collect(), key=lambda r: r.frame_idx)
-    assert rows and all(len(r.mfcc) == 13 for r in rows)
-    decoded = np.asarray(
-        audio.collect()[0]["samples"], dtype=np.float64
-    )
-    ref = dsp.mfcc(decoded, sr=sr, n_mfcc=13, n_fft=512, hop=256, n_mels=40)
-    assert len(rows) == ref.shape[0]
-    for r in rows[:5]:
-        assert np.allclose(r.mfcc, ref[r.frame_idx], atol=1e-9)
 
 
 def test_header_and_decode_agree_on_extensible_format():

@@ -328,3 +328,16 @@ def test_transcribe_segments_full_orchestration(spark):
         for r in transcribe_segments(audio.repartition(5), seg.repartition(3)).collect()
     }
     assert again == {k: tuple(v) for k, v in out.items()}
+
+
+def test_run_pipeline_empty_corpus(spark, tmp_path):
+    """An empty corpus runs through all five stages: each stage reads its
+    upstream table from this call, not from a workdir that was never
+    written."""
+    from speech_data_pipeline_spark.plans.pipeline import STAGE_ORDER, run_pipeline
+
+    audio = spark.createDataFrame([], "audio_id string, samples array<double>, sr int")
+    hosts = spark.createDataFrame([], "host_id string, samples array<double>, sr int")
+    out = run_pipeline(spark, audio, str(tmp_path), hosts=hosts)
+    assert set(out) == set(STAGE_ORDER)
+    assert all(df.count() == 0 for df in out.values())

@@ -126,26 +126,6 @@ def test_pack_sequences_properties(spark, ws):
 
 
 @given(
-    xs=st.lists(
-        st.floats(min_value=-1e3, max_value=1e3, allow_nan=False), min_size=2,
-        max_size=64,
-    )
-)
-@settings(max_examples=50, deadline=None)
-def test_dct2_ortho_preserves_energy(xs):
-    """Parseval for the orthonormal DCT-II: the full square transform
-    preserves the L2 norm (to fp rounding)."""
-    import numpy as np
-
-    from speech_data_pipeline_spark.ml import dsp
-
-    x = np.asarray(xs, dtype=np.float64)
-    D = dsp.dct2_ortho(len(x), len(x))
-    y = D @ x
-    assert np.linalg.norm(y) == pytest.approx(np.linalg.norm(x), rel=1e-9, abs=1e-9)
-
-
-@given(
     vals=st.lists(
         st.floats(min_value=0.0, max_value=500.0, allow_nan=False),
         min_size=12,

@@ -1,11 +1,8 @@
-"""Salted aggregation / join equivalence tests."""
+"""Salted aggregation equivalence tests."""
 
 from pyspark.sql import functions as F
 
-from speech_data_pipeline_spark.operators.skew import (
-    salted_aggregate,
-    salted_broadcast_join,
-)
+from speech_data_pipeline_spark.operators.skew import salted_aggregate
 
 
 def skewed_df(spark):
@@ -30,21 +27,4 @@ def test_salted_aggregate_matches_plain(spark):
         .agg(F.sum("value").alias("total"), F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    assert got == want
-
-
-def test_salted_broadcast_join_matches_plain(spark):
-    large = skewed_df(spark)
-    small = spark.createDataFrame(
-        [("hot", "H"), ("k1", "A"), ("k2", "B")], ["key", "tag"]
-    )
-    got = sorted(
-        (r.key, r.row_id, r.tag)
-        for r in salted_broadcast_join(
-            large, small, "key", n_salts=4, large_salt_cols=["row_id"]
-        ).collect()
-    )
-    want = sorted(
-        (r.key, r.row_id, r.tag) for r in large.join(small, "key", "inner").collect()
-    )
     assert got == want

@@ -83,40 +83,6 @@ def test_sidecar_preference(spark):
     assert got == {"a": "orig-a", "b": "plain-b"}  # c dropped, orig preferred
 
 
-def test_json_stage_roundtrip(spark, tmp_path):
-    """K1/K6 export -> S7 schema-enforced read: values and types survive."""
-    from pyspark.sql import functions as F
-
-    from speech_data_pipeline_spark.sources.jsonio import (
-        read_stage_json,
-        write_stage_json,
-    )
-
-    df = spark.createDataFrame(
-        [
-            ("a", 0.0, 1.25, "voice", 0.9),
-            ("a", 2.0, 3.5, "silence", 0.1),
-            ("b", 0.5, 0.75, "voice", 0.8),
-        ],
-        "audio_id string, start double, end double, type string, v_r double",
-    )
-    out = str(tmp_path / "vad_json")
-    write_stage_json(df, out)
-    back = read_stage_json(
-        spark, out, "start double, end double, type string, v_r double, audio_id string"
-    )
-    assert dict(back.dtypes)["start"] == "double"
-    assert sorted(map(tuple, back.select(*df.columns).collect())) == sorted(
-        map(tuple, df.collect())
-    )
-    # per-key directory layout (the reference's {audio}_outputs analog)
-    import os
-
-    assert sorted(
-        d for d in os.listdir(out) if d.startswith("audio_id=")
-    ) == ["audio_id=a", "audio_id=b"]
-
-
 def test_wavmeta_datasource(spark, tmp_path):
     """Custom Python DataSource: header-only metadata scan of a WAV
     directory — values match a full decode, broken files yield

@@ -15,18 +15,7 @@ from speech_data_pipeline_spark.operators.text import (
     fingerprint,
     language_id,
     quality_score,
-    token_count,
 )
-
-
-def test_token_count(spark):
-    df = spark.createDataFrame(
-        [(1, "hello world,  foo"), (2, "   "), (3, "one")], ["doc_id", "text"]
-    )
-    out = {r[0]: (r[1], r[2]) for r in rows(token_count(df), "doc_id", "n_tokens", "n_subwords")}
-    assert out[1] == (3, 4)  # 'hello','world',',','foo'
-    assert out[2][0] == 0
-    assert out[3] == (1, 1)
 
 
 def test_quality_bounds_and_repetition(spark):
