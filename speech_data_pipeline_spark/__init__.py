@@ -6,7 +6,7 @@ surveyed in SURVEY.md): segment/interval algebra, sessionization,
 sweep-line overlap flattening, incremental anti-join processing, ML
 inference UDF surfaces — plus the large-scale training-data operators a
 100 TB corpus pipeline needs (dedup, similarity search, text
-analysis) and pure-NumPy audio and image decode.
+analysis) and pure-NumPy audio decode.
 
 Design stance (SURVEY.md §7):
 - DataFrame/SQL declarative plans; Catalyst owns physical strategy.

@@ -20,9 +20,7 @@ Modules:
 - ``skew``        — salted two-phase aggregation
 - ``spectral``    — per-frame FFT energy
 - ``multimodal``  — binary media payloads: WAV decode, waveform chunking
-                    and segment slicing, frame sampling, image resize
+                    and segment slicing, frame sampling
 - ``flac``, ``mpegaudio``, ``vorbis``, ``mediainfo`` — pure-NumPy audio
                     codecs and header probes behind ``multimodal``'s decode
-- ``png``, ``gif``, ``jpeg``, ``webp`` — pure-NumPy image codecs behind
-                    ``multimodal.decode_image_bytes``
 """

@@ -12,13 +12,11 @@ external codecs: RIFF/WAV (PCM 8-32, IEEE float, G.711 μ-law/A-law,
 IMA-ADPCM — :func:`decode_wav_bytes`), native FLAC (pure-NumPy decoder
 with CRC + MD5 verification, operators/flac.py), and MPEG-1 Audio
 Layers I/II (operators/mpegaudio.py), dispatched by magic bytes in
-:func:`decode_audio_bytes`; images decode natively too (PNG, GIF,
-baseline JPEG, WebP-VP8L — :func:`decode_image_bytes`). The remaining
-clearly-marked seams are MPEG Layer III spectral Huffman (ISO tabular
-data underivable offline), ogg/m4a/aac, and lossy-VP8 WebP
-(NotImplementedError, deterministic fake behind ``fake=True``); the
-Spark-side plumbing — schema, batch iteration, chunking — is real and
-tested either way.
+:func:`decode_audio_bytes`. The remaining clearly-marked seams are
+MPEG Layer III spectral Huffman (ISO tabular data underivable offline)
+and ogg/m4a/aac (NotImplementedError, deterministic fake behind
+``fake=True``); the Spark-side plumbing — schema, batch iteration,
+chunking — is real and tested either way.
 """
 
 from __future__ import annotations
@@ -634,115 +632,6 @@ def sample_frames(
             .alias("frame_idx"),
             (F.col("sample_idx") / F.lit(target_fps)).alias("frame_ts"),
         )
-    )
-
-
-def decode_image_bytes(payload: bytes) -> "np.ndarray":  # noqa: F821
-    """Magic-byte image decode to a float64 grayscale (H, W) array in
-    [0, 1]. PNG, GIF, baseline JPEG, and lossless WebP are REAL (pure
-    NumPy + stdlib zlib: operators/png.py — all color types, 1-16 bit,
-    all filters, CRC-verified; operators/gif.py — LZW, interlace,
-    transparency, first frame for animations; operators/jpeg.py —
-    sequential DCT, Huffman, 4:2:0/4:2:2/4:4:4, restart markers;
-    operators/webp.py — VP8L transforms, color cache, LZ77,
-    meta-Huffman); multi-channel images collapse to luma by mean.
-    Lossy WebP (VP8)/AVIF/progressive-JPEG raise — those stay the
-    documented external-backend seam.
-    """
-    import numpy as np
-
-    b = bytes(payload)
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        from speech_data_pipeline_spark.operators.png import decode_png_bytes
-
-        d = decode_png_bytes(b)
-        px = d["pixels"].astype(np.float64)
-        scale = 65535.0 if d["bit_depth"] == 16 else 255.0
-        gray = px[..., :3].mean(axis=2) if d["channels"] >= 3 else px[..., 0]
-        return gray / scale
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from speech_data_pipeline_spark.operators.gif import decode_gif_bytes
-
-        px = decode_gif_bytes(b)["frames"][0]["pixels"].astype(np.float64)
-        return px[..., :3].mean(axis=2) / 255.0
-    if b[:2] == b"\xff\xd8":
-        from speech_data_pipeline_spark.operators.jpeg import (
-            decode_jpeg_bytes,
-        )
-
-        d = decode_jpeg_bytes(b)
-        px = d["pixels"].astype(np.float64)
-        gray = px[..., :3].mean(axis=2) if d["channels"] >= 3 else px[..., 0]
-        return gray / 255.0
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        from speech_data_pipeline_spark.operators.webp import (
-            decode_webp_bytes,
-        )
-
-        px = decode_webp_bytes(b)["pixels"].astype(np.float64)
-        return px[..., :3].mean(axis=2) / 255.0
-    raise NotImplementedError(
-        "non-PNG/GIF/JPEG/lossless-WebP image decode requires codec "
-        "libraries not in this environment (PIL/libwebp-VP8)"
-    )
-
-
-def resize_frames(
-    df: DataFrame,
-    out_h: int = 8,
-    out_w: int = 8,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    fake_decode: bool = True,
-) -> DataFrame:
-    """Image/frame resize: REAL nearest-neighbor resampling (vectorized
-    NumPy index math) over the image decode seam. With
-    ``fake_decode=False``, PNG payloads decode for REAL
-    (:func:`decode_image_bytes`, any true source dimensions); with
-    ``fake_decode=True`` the payload bytes tile into a deterministic
-    16×16 grayscale image, exercising the identical resize path for
-    arbitrary payloads (the JPEG-family seam). Arrow-batched
-    ``mapInPandas``, one Python call per batch.
-
-    Emits ``(id, height, width, pixels array<double>)`` row-major.
-    """
-    import numpy as np
-
-    src_h = src_w = 16
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tile_rows = (np.arange(out_h) * src_h // out_h).astype(np.int64)
-        tile_cols = (np.arange(out_w) * src_w // out_w).astype(np.int64)
-        for pdf in batches:
-            pixels = []
-            for b in pdf[payload_col]:
-                if fake_decode:
-                    raw = np.frombuffer(bytes(b), dtype=np.uint8)
-                    need = src_h * src_w
-                    tiled = np.resize(
-                        raw if len(raw) else np.zeros(1, np.uint8), need
-                    )
-                    img = tiled.reshape(src_h, src_w).astype(np.float64) / 255.0
-                    small = img[np.ix_(tile_rows, tile_cols)]
-                else:
-                    img = decode_image_bytes(b)
-                    h, w = img.shape
-                    ri = (np.arange(out_h) * h // out_h).astype(np.int64)
-                    ci = (np.arange(out_w) * w // out_w).astype(np.int64)
-                    small = img[np.ix_(ri, ci)]
-                pixels.append(small.ravel().tolist())
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "height": out_h,
-                    "width": out_w,
-                    "pixels": pixels,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        kernel,
-        schema=f"{id_col} long, height int, width int, pixels array<double>",
     )
 
 

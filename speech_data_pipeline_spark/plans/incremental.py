@@ -85,8 +85,6 @@ def run_incremental_stage(
     return spark.read.parquet(out_path)
 
 
-#: Mergeable partial-aggregate state columns produced/consumed by the
-#: continuous-aggregate helpers: additive sums + count (mean derives).
 def aggregate_delta(
     df: DataFrame,
     keys: list[str],

@@ -15,6 +15,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g: a local-mode
+    driver JVM holds every executor, and a heap sized past the host
+    dies on a native-memory commit failure under load."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "speech_data_pipeline_spark",
     master: str | None = None,
@@ -55,7 +63,10 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
     )
     if master:
         builder = builder.master(master)

@@ -174,7 +174,10 @@ def test_knn_capped_edges_match_bucket_local_brute(spark):
     assert got == exp
 
 
-STRESS = "/root/repo/stress_data/sf1skew/embeddings.parquet"
+STRESS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "stress_data/sf1skew/embeddings.parquet",
+)
 
 
 @pytest.mark.skipif(

@@ -7,12 +7,18 @@ defaults) and checks a timestamp-sensitive query still matches its
 DuckDB oracle value-for-value."""
 
 import json
+import os
 import subprocess
 import sys
+from pathlib import Path
+
+import pytest
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 SCRIPT = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 
 spark = (
@@ -47,10 +53,33 @@ print(json.dumps({"ok": True}))
 
 def test_driver_contract_on_plain_session():
     proc = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, ROOT],
         capture_output=True,
         text=True,
         timeout=420,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert json.loads(proc.stdout.strip().splitlines()[-1])["ok"]
+
+
+
+def _jvm_bytes(size: str) -> int:
+    """A JVM memory string (``512m``, ``48g``; bare numbers are MiB)."""
+    units = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+    size = size.strip().lower()
+    if size[-1] in units:
+        return int(size[:-1]) * units[size[-1]]
+    return int(size) * units["m"]
+
+
+@pytest.mark.skipif(
+    "SPARK_DRIVER_MEMORY" in os.environ,
+    reason="SPARK_DRIVER_MEMORY overrides the default heap",
+)
+def test_default_driver_memory_fits_the_host(spark):
+    """The default driver heap fits in physical memory: a local-mode
+    driver sized past the host dies on a native-memory commit failure
+    under load."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = spark.sparkContext.getConf().get("spark.driver.memory")
+    assert _jvm_bytes(heap) <= physical, (heap, physical)

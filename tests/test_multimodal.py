@@ -246,23 +246,6 @@ def test_sample_frames_exact_multiple_and_bad_durations(spark):
     assert 2 not in out and 3 not in out
 
 
-def test_resize_frames_shape_and_determinism(spark):
-    from speech_data_pipeline_spark.operators.multimodal import resize_frames
-
-    df = spark.createDataFrame(
-        [(1, bytes(range(256))), (2, b"\x00")], "media_id long, payload binary"
-    )
-    out = {r.media_id: r for r in resize_frames(df, out_h=4, out_w=4).collect()}
-    assert out[1].height == 4 and out[1].width == 4
-    assert len(out[1].pixels) == 16
-    # nearest-neighbor of the 16x16 ramp: pixel (r,c) = (4r*16 + 4c)/255
-    assert out[1].pixels[0] == 0.0
-    assert out[1].pixels[5] == (4 * 16 + 4) / 255.0
-    assert all(p == 0.0 for p in out[2].pixels)  # zero payload -> zeros
-    again = {r.media_id: r for r in resize_frames(df, out_h=4, out_w=4).collect()}
-    assert again[1].pixels == out[1].pixels
-
-
 def test_header_and_decode_agree_on_extensible_format():
     """WAVE_FORMAT_EXTENSIBLE: the metadata probe must resolve the
     SubFormat code exactly as the decoder does (review finding — a

@@ -88,9 +88,6 @@ def test_wavmeta_datasource(spark, tmp_path):
     directory — values match a full decode, broken files yield
     ok=false rows (never task failures), and file batches spread
     across the requested partitions."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tests")
     from test_multimodal import make_wav
 
     from speech_data_pipeline_spark.operators.multimodal import decode_wav_bytes
@@ -140,10 +137,8 @@ def test_wavmeta_datasource(spark, tmp_path):
 def test_wavmeta_stream_reader_incremental(spark, tmp_path):
     """Streaming wavmeta: two micro-batch rounds over the same
     checkpoint pick up exactly the newly-landed files."""
-    import sys
     import tempfile
 
-    sys.path.insert(0, "/root/repo/tests")
     from test_multimodal import make_wav
 
     from speech_data_pipeline_spark.sources.wavmeta import register_wavmeta

@@ -18,12 +18,13 @@ Serialized protocol: run alone on the box, one metric at a time.
 """
 
 import json
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from speech_data_pipeline_spark.operators import dedup as dd  # noqa: E402
 from speech_data_pipeline_spark.queries.corpus_q import (  # noqa: E402

@@ -20,9 +20,10 @@ census is an upper bound on the shuffles a run pays.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def census(plan: str) -> dict[str, int]:
