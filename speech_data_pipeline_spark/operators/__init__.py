@@ -21,6 +21,6 @@ Modules:
 - ``spectral``    — per-frame FFT energy
 - ``multimodal``  — binary media payloads: WAV decode, waveform chunking
                     and segment slicing, frame sampling
-- ``flac``, ``mpegaudio``, ``vorbis``, ``mediainfo`` — pure-NumPy audio
-                    codecs and header probes behind ``multimodal``'s decode
+- ``flac``, ``vorbis`` — pure-NumPy audio codecs behind ``multimodal``'s
+                    decode
 """

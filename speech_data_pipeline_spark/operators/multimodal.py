@@ -10,13 +10,12 @@ are chunked ``(audio_id, chunk_idx, chunk)`` — the W6 pattern
 Audio decode is REAL for every container the repo can verify without
 external codecs: RIFF/WAV (PCM 8-32, IEEE float, G.711 μ-law/A-law,
 IMA-ADPCM — :func:`decode_wav_bytes`), native FLAC (pure-NumPy decoder
-with CRC + MD5 verification, operators/flac.py), and MPEG-1 Audio
-Layers I/II (operators/mpegaudio.py), dispatched by magic bytes in
-:func:`decode_audio_bytes`. The remaining clearly-marked seams are
-MPEG Layer III spectral Huffman (ISO tabular data underivable offline)
-and ogg/m4a/aac (NotImplementedError, deterministic fake behind
-``fake=True``); the Spark-side plumbing — schema, batch iteration,
-chunking — is real and tested either way.
+with CRC + MD5 verification, operators/flac.py) and Ogg Vorbis
+(operators/vorbis.py), dispatched by magic bytes in
+:func:`decode_audio_bytes`. Any other payload (mp3/m4a/aac) goes to
+the WAV decoder and raises ``NotImplementedError``; a deterministic
+fake sits behind ``fake=True``, and the Spark-side plumbing — schema,
+batch iteration, chunking — is real and tested either way.
 """
 
 from __future__ import annotations
@@ -377,8 +376,8 @@ def decode_wav_bytes(
     modules/speaker_rematch.py:47 torchaudio.load — both hit WAV files
     produced by the pipeline's own export). Native FLAC is decoded by
     the sibling pure-NumPy codec (operators/flac.py) via
-    :func:`decode_audio_bytes`; only perceptual codecs (mp3/ogg/m4a/
-    aac) still require an external backend and raise.
+    :func:`decode_audio_bytes`, as is Ogg Vorbis (operators/vorbis.py);
+    mp3/m4a/aac still require an external backend and raise.
     """
     import struct
 
@@ -449,17 +448,15 @@ def decode_wav_bytes(
 
 
 def decode_audio_bytes(payload: bytes, mono: bool = True) -> tuple[list, int]:
-    """Magic-byte audio dispatch: ``RIFF``/``WAVE`` →
+    """Magic-byte audio dispatch: ``fLaC`` → the pure-NumPy FLAC
+    decoder (operators/flac.py), ``OggS`` → the pure-NumPy Vorbis I
+    decoder (operators/vorbis.py — codebooks/floor1/residues/IMDCT, all
+    from the in-stream setup header), anything else →
     :func:`decode_wav_bytes` (PCM / IEEE-float / G.711 / IMA-ADPCM),
-    ``fLaC`` → the pure-NumPy FLAC decoder (operators/flac.py), MPEG
-    audio sync → the pure-NumPy MPEG-1 Layer I/II decoder
-    (operators/mpegaudio.py). All return ``(samples_or_channels, sr)``
-    with identical mono semantics, so every decode kernel takes any
-    container transparently. ``OggS`` → the pure-NumPy Vorbis I decoder
-    (operators/vorbis.py — codebooks/floor1/residues/IMDCT, all from the
-    in-stream setup header). Remaining seams: MPEG Layer III spectral
-    decode (needs the ISO Huffman code tables — tabular data this
-    offline container cannot derive), Ogg Opus, and m4a/aac.
+    which raises ``NotImplementedError`` on a non-RIFF payload. All
+    return ``(samples_or_channels, sr)`` with identical mono semantics,
+    so every decode kernel takes any container transparently. Not
+    decoded: Ogg Opus, mp3, m4a and aac.
     """
     b = bytes(payload)
     if b[:4] == b"fLaC":
@@ -474,16 +471,6 @@ def decode_audio_bytes(payload: bytes, mono: bool = True) -> tuple[list, int]:
         )
 
         return decode_vorbis_bytes(b, mono=mono)
-    if b[:3] == b"ID3" or (
-        len(b) >= 2 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0
-    ):
-        # MPEG-1 audio: Layers I/II decode natively; Layer III raises
-        # the documented Huffman-table seam (operators/mpegaudio.py)
-        from speech_data_pipeline_spark.operators.mpegaudio import (
-            decode_mpeg_audio_bytes,
-        )
-
-        return decode_mpeg_audio_bytes(b, mono=mono)
     return decode_wav_bytes(b, mono=mono)
 
 
@@ -553,14 +540,12 @@ def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
     Real path: RIFF/WAV via :func:`decode_wav_bytes` (pure NumPy, no
     codec library): PCM, IEEE-float, G.711 μ-law/A-law, IMA ADPCM —
     plus native FLAC via :func:`~speech_data_pipeline_spark.operators.
-    flac.decode_flac_bytes` and MPEG-1 Layer I/II via
-    :func:`~speech_data_pipeline_spark.operators.mpegaudio.
-    decode_mpeg_audio_bytes` (magic-byte dispatch in
-    :func:`decode_audio_bytes`). Remaining perceptual codecs (mp3
-    Layer III spectral Huffman, ogg/m4a/aac) raise
-    NotImplementedError — the container ships no codecs
-    (librosa/PIL/ffmpeg absent) and the ISO Huffman code tables are
-    underivable offline; that seam is documented, not hidden. With ``fake=True`` a deterministic pseudo-decode (bytes →
+    flac.decode_flac_bytes` and Ogg Vorbis via
+    :func:`~speech_data_pipeline_spark.operators.vorbis.
+    decode_vorbis_bytes` (magic-byte dispatch in
+    :func:`decode_audio_bytes`). Other payloads (mp3/m4a/aac) raise
+    ``NotImplementedError`` — the package depends on no codec library
+    (librosa/ffmpeg). With ``fake=True`` a deterministic pseudo-decode (bytes →
     floats in [-1, 1)) exercises the plumbing for arbitrary payloads.
     """
 
@@ -721,61 +706,6 @@ def parse_wav_header(payload: bytes) -> dict:
     }
 
 
-def encode_media_mp2(
-    df: DataFrame,
-    bitrate: int = 192_000,
-    id_col: str = "media_id",
-    samples_col: str = "samples",
-    sr_col: str = "sr",
-) -> DataFrame:
-    """Lossy MPEG-1 Layer II export stage: ``(media_id, samples
-    array<double>, sr)`` → ``(media_id, payload binary, n_samples,
-    pcm_bytes, mp2_bytes)`` — the compressed-audio sibling of
-    :func:`encode_media_flac` (same sink contract; fixed bitrate
-    instead of lossless). Sample rate must be an MPEG-1 rate
-    (32/44.1/48 kHz); trailing samples short of a 1152-frame are
-    dropped (frame-granular container).
-
-    Arrow-batched ``mapInPandas``, one row per media id — a 100 TB
-    export is a map-only stage with no shuffle; emitted size columns
-    make the compression ratio queryable.
-    """
-    from speech_data_pipeline_spark.operators.mpegaudio import (
-        encode_mpeg2_audio,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads, n_s, raw_b, mp2_b = [], [], [], []
-            for samples, sr in zip(pdf[samples_col], pdf[sr_col]):
-                x = np.asarray(samples, dtype=np.float64)
-                blob = encode_mpeg2_audio([x], int(sr), bitrate=bitrate)
-                payloads.append(blob)
-                kept = (len(x) // 1152) * 1152
-                n_s.append(kept)
-                raw_b.append(kept * 2)  # 16-bit PCM equivalent
-                mp2_b.append(len(blob))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": payloads,
-                    "n_samples": n_s,
-                    "pcm_bytes": raw_b,
-                    "mp2_bytes": mp2_b,
-                }
-            )
-
-    return df.select(id_col, samples_col, sr_col).mapInPandas(
-        kernel,
-        schema=(
-            f"{id_col} long, payload binary, n_samples long, "
-            "pcm_bytes long, mp2_bytes long"
-        ),
-    )
-
-
 def encode_media_vorbis(
     df: DataFrame,
     id_col: str = "media_id",
@@ -785,7 +715,7 @@ def encode_media_vorbis(
     """Lossy Ogg Vorbis export stage: ``(media_id, samples
     array<double>, sr)`` → ``(media_id, payload binary, n_samples,
     pcm_bytes, ogg_bytes)`` — the Ogg sibling of
-    :func:`encode_media_mp2` (same sink contract). Any sample rate is
+    :func:`encode_media_flac` (same sink contract). Any sample rate is
     legal (Vorbis carries the rate verbatim); output length is exact to
     the sample (the encoder writes the true length into the final page
     granule, which the decoder honors).

@@ -35,7 +35,7 @@ Scope — the complete Vorbis I decode chain:
   final-granule tail truncation.
 
 The encoder exists to make self-contained fixtures (same pattern as the
-Layer II encoder in operators/mpegaudio.py): it writes a minimal but
+FLAC encoder in operators/flac.py): it writes a minimal but
 fully spec-conformant mono/stereo stream — one 256-sample mode, a
 two-point floor1 line per channel, residue type 2 with a 257-entry
 lookup-type-1 value codebook — and every bit of it goes through the
@@ -969,7 +969,7 @@ def decode_vorbis_bytes(
     payload: bytes, mono: bool = True
 ) -> tuple[list, int]:
     """Decode a whole Ogg Vorbis stream; same ``(samples_or_channels,
-    sr)`` contract as the WAV/FLAC/MPEG decoders in this package."""
+    sr)`` contract as the WAV/FLAC decoders in this package."""
     b = bytes(payload)
     packets = ogg_packets(b)
     try:
@@ -979,8 +979,7 @@ def decode_vorbis_bytes(
     if ident[:8] == b"OpusHead":
         raise NotImplementedError(
             "Ogg Opus payload: CELT/SILK decode needs a codec backend "
-            "the container doesn't ship (header metadata via "
-            "operators/mediainfo.probe_ogg)"
+            "this package does not include"
         )
     channels, sr, blocksizes = parse_ident(ident)
     comment, _, _ = next(packets)

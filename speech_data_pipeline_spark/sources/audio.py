@@ -1,4 +1,4 @@
-"""Audio corpus sources (SURVEY.md §2.1 S1/S6/S9/S10).
+"""Audio corpus sources (SURVEY.md §2.1 S1/S9/S10).
 
 The reference scans a folder for six audio extensions and keys
 everything by the file's basename (modules/models/utils.py:11-22).
@@ -14,7 +14,6 @@ exceeds Arrow limits.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,44 +55,6 @@ def scan_audio_dir(
         "modificationTime",
         "content",
     )
-
-
-def probe_durations(df: DataFrame, default_sr: int = 16_000) -> DataFrame:
-    """S6: duration probe; 0.0 on failure (reference
-    modules/vad_multi.py:12-16 returns 0 for broken files).
-
-    REAL header-level parsing for wav/flac/mp3/ogg-vorbis/opus/m4a
-    (operators/mediainfo.py — frame-header walks, Xing/VBRI, granule
-    positions, mvhd; no codec libraries, like librosa's own
-    ``get_duration`` path this mirrors). Files no parser recognizes
-    fall back to the previous byte-length estimate
-    (``bytes / (sr·2)``, the 16-bit-mono approximation), and empty
-    payloads stay 0.0. Arrow-batched pandas UDF — a map-only metadata
-    pass at any corpus size.
-    """
-    from speech_data_pipeline_spark.operators.mediainfo import (
-        probe_media_bytes,
-    )
-
-    @F.pandas_udf("double")
-    def _dur(content: pd.Series, length: pd.Series) -> pd.Series:
-        out = []
-        for b, ln in zip(content, length):
-            info = None
-            if b is not None and len(b) >= 12:
-                try:
-                    info = probe_media_bytes(bytes(b))
-                except Exception:  # noqa: BLE001 — malformed headers
-                    info = None
-            if info is not None and info.get("duration") is not None:
-                out.append(float(info["duration"]))
-            elif ln is not None and ln > 0:
-                out.append(float(ln) / (default_sr * 2.0))
-            else:
-                out.append(0.0)
-        return pd.Series(out)
-
-    return df.withColumn("duration", _dur(F.col("content"), F.col("length")))
 
 
 def scan_reference_voiceprints(spark: SparkSession, directory: str) -> DataFrame:

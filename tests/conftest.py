@@ -1,9 +1,16 @@
+import os
 import sys
 from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package from PYTHONPATH, not from
+# this process's sys.path, so the suite runs from any working directory.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH", "")) if p
+)
 
 
 @pytest.fixture(scope="session")

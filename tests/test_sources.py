@@ -1,4 +1,4 @@
-"""Tests for the audio corpus source layer (S1/S6/S9/S10)."""
+"""Tests for the audio corpus source layer (S1/S9/S10)."""
 
 import os
 import shutil
@@ -7,7 +7,6 @@ import tempfile
 import pytest
 
 from speech_data_pipeline_spark.sources.audio import (
-    probe_durations,
     resolve_transcript_sidecars,
     scan_audio_dir,
     scan_reference_voiceprints,
@@ -42,21 +41,6 @@ def test_scan_filters_extensions_and_strips_ids(spark, audio_dir):
 def test_scan_recursive(spark, audio_dir):
     got = {r.audio_id for r in scan_audio_dir(spark, audio_dir, recursive=True).collect()}
     assert got == {"ep1", "ep2", "ep4"}
-
-
-def test_probe_durations_zero_on_empty(spark, audio_dir):
-    scanned = scan_audio_dir(spark, audio_dir)
-    zero = scanned.limit(0).union(
-        scanned.limit(1).selectExpr(
-            "'broken' as audio_id", "path", "cast(0 as long) as length",
-            "modificationTime", "content"
-        )
-    )
-    got = {
-        r.audio_id: r.duration
-        for r in probe_durations(scanned.unionByName(zero)).collect()
-    }
-    assert got["broken"] == 0.0 and got["ep1"] > 0
 
 
 def test_voiceprint_scan(spark, audio_dir):

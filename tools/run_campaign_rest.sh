@@ -4,7 +4,7 @@
 # the worst-set repeats take min across three separate runs, the skew
 # run's signal is per-query deltas, sf10 is a spot-bench.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 W2="dedup_minhash_lsh dedup_minhash_lsh_uncollapsed embed_mutual_knn \
 eval_bootstrap_ci eval_ndcg_at_k graph_triangle_count json_props_extract \
 mine_hard_negatives ml_perceptron_quality search_phrase_positions \

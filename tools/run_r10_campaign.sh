@@ -6,7 +6,7 @@
 #   2. re-measure the three inverted round-9 sf0.1 cells min-of-2
 #   3. sf10 capstone composites min-of-2
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 
 echo "=== 1. candidate cardinality sf1 / sf10 ==="
 python tools/diag_cardinality_r10.py stress_data/sf1 \

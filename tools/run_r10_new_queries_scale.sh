@@ -2,7 +2,7 @@
 # Round-10 new-query scale evidence (serialized — run alone on the box):
 # sf1 x2, sf1skew x1, sf10 x2 for the 18 queries added this round.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 
 NEW="stats_wilson_ci stats_friedman_test stats_anova_twoway \
 survival_nelson_aalen survival_logrank_test eval_krippendorff_alpha \

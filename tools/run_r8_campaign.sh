@@ -8,7 +8,7 @@
 # internally consistent set; this script refreshes only the round-8
 # evidence rows. All phases serialized.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 AUD="sim_blocked_recall sim_blocked_precision"
 NEW_Q="stats_anova_f stats_mann_kendall text_js_divergence \
 dedup_containment sim_cosine_histogram graph_adamic_adar \

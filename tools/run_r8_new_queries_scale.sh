@@ -4,7 +4,7 @@
 # sim_blocked_precision (serialized; never run concurrent Spark work
 # alongside).
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 NEW_Q="stats_anova_f stats_mann_kendall text_js_divergence \
 dedup_containment sim_cosine_histogram graph_adamic_adar \
 search_query_likelihood eval_pass_at_k sim_blocked_precision"

@@ -8,7 +8,7 @@
 #    the code-enforced <=2000-rep slice, so its old cells are obsolete
 #    twice over).
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 VAR_Q="eval_mrr_at_k text_unigram_train"
 AUD_Q="sim_blocked_recall sim_blocked_precision"
 for rep in 1 2 3; do

@@ -8,7 +8,7 @@
 #   3. canonical sf0.1 full-registry headline: min of TWO serialized
 #      single-pass runs under the round-8 cold-cache semantics
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 
 VAR_ROWS="rollup_pricing sim_late_interaction_topk \
 dedup_minhash_lsh_uncollapsed q17_small_quantity_revenue \

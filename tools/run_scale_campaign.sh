@@ -3,7 +3,7 @@
 # stress decades (shared box — never run two benches concurrently).
 # Produces bench_scale/*.json with the new `rows` cardinality maps.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 W2="dedup_minhash_lsh dedup_minhash_lsh_uncollapsed embed_mutual_knn \
 eval_bootstrap_ci eval_ndcg_at_k graph_triangle_count json_props_extract \
 mine_hard_negatives ml_perceptron_quality search_phrase_positions \
