@@ -13,9 +13,10 @@ IMA-ADPCM — :func:`decode_wav_bytes`), native FLAC (pure-NumPy decoder
 with CRC + MD5 verification, operators/flac.py) and Ogg Vorbis
 (operators/vorbis.py), dispatched by magic bytes in
 :func:`decode_audio_bytes`. Any other payload (mp3/m4a/aac) goes to
-the WAV decoder and raises ``NotImplementedError``; a deterministic
-fake sits behind ``fake=True``, and the Spark-side plumbing — schema,
-batch iteration, chunking — is real and tested either way.
+the WAV decoder and raises ``NotImplementedError`` naming its
+container; a deterministic fake sits behind ``fake=True``, and the
+Spark-side plumbing — schema, batch iteration, chunking — is real and
+tested either way.
 """
 
 from __future__ import annotations
@@ -359,6 +360,19 @@ def _ima_adpcm_decode(data: bytes, n_ch: int, block_align: int):
     return [np.asarray(c, dtype=np.float64) for c in chans]
 
 
+def _container(b: bytes) -> str:
+    """The compressed container that ``b``'s magic bytes identify."""
+    if b[:3] == b"ID3":
+        return "mp3: ID3 tag"
+    if b[4:8] == b"ftyp":
+        return "mp4/m4a: ftyp box"
+    if len(b) >= 2 and b[0] == 0xFF and b[1] & 0xF6 == 0xF0:
+        return "aac: ADTS sync"  # 12-bit sync, layer bits 00
+    if len(b) >= 2 and b[0] == 0xFF and b[1] & 0xE0 == 0xE0:
+        return "mp3: MPEG audio frame sync"
+    return "unknown format"
+
+
 def decode_wav_bytes(
     payload: bytes, mono: bool = True
 ) -> tuple[list, int]:
@@ -376,20 +390,28 @@ def decode_wav_bytes(
     modules/speaker_rematch.py:47 torchaudio.load — both hit WAV files
     produced by the pipeline's own export). Native FLAC is decoded by
     the sibling pure-NumPy codec (operators/flac.py) via
-    :func:`decode_audio_bytes`, as is Ogg Vorbis (operators/vorbis.py);
-    mp3/m4a/aac still require an external backend and raise.
+    :func:`decode_audio_bytes`, as is Ogg Vorbis (operators/vorbis.py).
+
+    A non-RIFF payload raises ``NotImplementedError`` naming the
+    container its magic bytes identify (mp3, mp4/m4a, aac), as does a
+    RIFF payload of another form or a compressed WAV format tag; a
+    truncated or malformed RIFF/WAV payload raises ``ValueError``.
     """
     import struct
 
     import numpy as np
 
     b = bytes(payload)
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+    if b[:4] != b"RIFF":
         raise NotImplementedError(
-            "not an uncompressed RIFF/WAV payload; use decode_audio_bytes "
-            "for FLAC — other compressed formats require a codec backend "
-            "(librosa/ffmpeg) unavailable here"
+            f"not a RIFF/WAV payload ({_container(b)}); the package decodes "
+            "RIFF/WAV, FLAC and Ogg Vorbis only, with no codec backend "
+            "(librosa/ffmpeg) for other formats"
         )
+    if len(b) < 12:
+        raise ValueError("malformed WAV: truncated RIFF header")
+    if b[8:12] != b"WAVE":
+        raise NotImplementedError(f"RIFF form {b[8:12]!r} is not WAVE audio")
     fmt6, data_off, data_size = _walk_riff(b)
     audio_format, n_ch, sr, _brate, _balign, bits = fmt6
     data = b[data_off : data_off + data_size]
@@ -453,7 +475,8 @@ def decode_audio_bytes(payload: bytes, mono: bool = True) -> tuple[list, int]:
     decoder (operators/vorbis.py — codebooks/floor1/residues/IMDCT, all
     from the in-stream setup header), anything else →
     :func:`decode_wav_bytes` (PCM / IEEE-float / G.711 / IMA-ADPCM),
-    which raises ``NotImplementedError`` on a non-RIFF payload. All
+    which raises ``NotImplementedError`` naming the container of a
+    non-RIFF payload and ``ValueError`` on a malformed RIFF one. All
     return ``(samples_or_channels, sr)`` with identical mono semantics,
     so every decode kernel takes any container transparently. Not
     decoded: Ogg Opus, mp3, m4a and aac.

@@ -4,15 +4,20 @@ The reference's only recovery mechanism is ``skip_if_exist`` (per-file
 output-existence checks in every stage) plus per-file try/except
 counters. The engine's equivalents:
 
-- ``pending``      — ``inputs LEFT ANTI JOIN done`` on the key: the
+- ``pending``      — ``inputs LEFT ANTI JOIN done`` on ``audio_id``: the
   incremental-processing primitive. One scan of the done-keys column
   (column-pruned), broadcast when small.
 - ``run_incremental_stage`` — compute only pending rows, append results
   to the stage table. Failures are **rows, not control flow**: the
-  stage function emits a ``status``/``error`` column pair; a re-run
-  picks failed keys up again if ``retry_failed``.
+  stage function may emit a ``status``/``error`` column pair, and a
+  re-run picks keys whose rows are not ``'ok'`` up again.
 - ``stage_counters`` — the A7 completed/failed report as one grouped
   aggregate instead of per-file exception counting.
+
+Each stage evaluates ``inputs`` twice: the emptiness check of its
+pending rows, then the stage itself. ``plans/pipeline.run_pipeline``
+persists its decoded audio for the whole call, so both, in all five
+stages, read one decoded copy.
 
 At 100 TB the done-set is a Delta/parquet table partitioned like the
 input; the anti-join prunes to key columns and broadcasts when the
@@ -28,23 +33,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def pending(
-    inputs: DataFrame,
-    done: DataFrame | None,
-    key: str = "audio_id",
-    retry_failed: bool = True,
-) -> DataFrame:
-    """Rows of ``inputs`` whose key is absent from ``done`` (J9).
+def pending(inputs: DataFrame, done: DataFrame | None) -> DataFrame:
+    """Rows of ``inputs`` whose ``audio_id`` is absent from ``done`` (J9).
 
-    With ``retry_failed``, done rows whose ``status != 'ok'`` do not
-    count as done, so failed keys re-enter the work set.
+    Done rows whose ``status != 'ok'`` do not count as done, so failed
+    keys re-enter the work set.
     """
     if done is None:
         return inputs
-    done_keys = done
-    if retry_failed and "status" in done.columns:
-        done_keys = done.where(F.col("status") == "ok")
-    return inputs.join(done_keys.select(key).distinct(), key, "left_anti")
+    if "status" in done.columns:
+        done = done.where(F.col("status") == "ok")
+    return inputs.join(done.select("audio_id").distinct(), "audio_id", "left_anti")
 
 
 def stage_counters(stage_out: DataFrame, key: str = "audio_id") -> DataFrame:
@@ -61,11 +60,10 @@ def run_incremental_stage(
     inputs: DataFrame,
     stage_fn: Callable[[DataFrame], DataFrame],
     out_path: str,
-    key: str = "audio_id",
 ) -> DataFrame:
     """Run ``stage_fn`` over not-yet-done inputs; append to ``out_path``.
 
-    ``stage_fn`` must return a DataFrame containing ``key`` and may
+    ``stage_fn`` must return a DataFrame containing ``audio_id`` and may
     include ``status``/``error`` columns (defaulted to 'ok'/null).
     Returns the full stage table after the append. Idempotent: a second
     call with the same inputs computes nothing new.
@@ -73,8 +71,8 @@ def run_incremental_stage(
     done = None
     if os.path.exists(out_path):
         done = spark.read.parquet(out_path)
-    todo = pending(inputs, done, key=key)
-    if todo.limit(1).count() == 0:
+    todo = pending(inputs, done)
+    if todo.isEmpty():
         return done if done is not None else spark.createDataFrame([], "audio_id string")
     out = stage_fn(todo)
     if "status" not in out.columns:

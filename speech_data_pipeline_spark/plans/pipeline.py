@@ -9,19 +9,80 @@ keyed table per stage under ``workdir/{stage}``, each stage running
 only for keys absent from its table (plans/incremental.pending). Stage
 gating (run_vad/run_sep_filter/... flags, sh:10-14) maps to the
 ``stages`` argument.
+
+``STAGES`` is the pipeline as data: each stage names its upstream stage
+and a function of the pending audio, that upstream's rows for the
+pending files, the host voiceprints and the stage's keyword conf.
+``run_pipeline`` is one loop over it.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.plans import stages as st
 from speech_data_pipeline_spark.plans.incremental import run_incremental_stage
 
-STAGE_ORDER = ("vad", "separation", "diarization", "rematch", "host_match")
+
+def _vad(audio: DataFrame, _up, _hosts, **kw) -> DataFrame:
+    return st.vad_stage(audio, **kw)
+
+
+def _separation(audio: DataFrame, vad: DataFrame, _hosts, **kw) -> DataFrame:
+    scored, gaps = st.separation_stage(audio, vad, **kw)
+    return scored.withColumn("kind", F.lit("window")).unionByName(
+        gaps.select(
+            "audio_id", "start", "end",
+            F.lit(None).cast("double").alias("v_r"),
+            F.lit(None).cast("double").alias("nv_r"),
+            F.lit("gap").alias("kind"),
+        )
+    )
+
+
+def _diarization(audio: DataFrame, sep: DataFrame, _hosts, **kw) -> DataFrame:
+    scored = sep.where(F.col("kind") == "window").drop("kind")
+    gaps = sep.where(F.col("kind") == "gap").select("audio_id", "start", "end")
+    single, overlap = st.diarization_stage(scored, gaps, **kw)
+    return single.withColumnRenamed("tag", "speaker").withColumn(
+        "overlapping", F.lit(False)
+    ).unionByName(
+        overlap.select(
+            "audio_id",
+            F.concat_ws("+", "tags").alias("speaker"),
+            F.lit(True).alias("overlapping"),
+            "start",
+            "end",
+        )
+    )
+
+
+def _rematch(audio: DataFrame, diar: DataFrame, _hosts, **kw) -> DataFrame:
+    single = diar.where(~F.col("overlapping")).select(
+        "audio_id", "start", "end", F.col("speaker").alias("tag")
+    )
+    merged, _mapping = st.rematch_stage(audio, single, **kw)
+    return merged
+
+
+def _host_match(audio: DataFrame, rematched: DataFrame, hosts: DataFrame, **kw) -> DataFrame:
+    return st.host_match_stage(audio, rematched.drop("status", "error"), hosts, **kw)
+
+
+#: name -> (upstream stage, fn(pending audio, upstream rows of the
+#: pending files, hosts, **stage_conf[name])), in run order.
+STAGES = {
+    "vad": (None, _vad),
+    "separation": ("vad", _separation),
+    "diarization": ("separation", _diarization),
+    "rematch": ("diarization", _rematch),
+    "host_match": ("rematch", _host_match),
+}
+STAGE_ORDER = tuple(STAGES)
 
 
 def run_pipeline(
@@ -35,91 +96,46 @@ def run_pipeline(
     """Run the pipeline incrementally; returns {stage: full stage table}.
 
     Re-running with a superset corpus computes only new ``audio_id``s
-    per stage; stage tables append idempotently.
+    per stage; stage tables append idempotently. ``host_match`` runs
+    only when ``hosts`` is given.
+
+    ``audio`` and ``hosts`` are persisted for the length of the call
+    (unless the caller already cached them) and released when it ends,
+    so every stage, pending anti-join and emptiness check reads one
+    decoded copy: a pass decodes each file once, not once per job.
 
     ``stage_conf`` passes per-stage keyword overrides straight to the
     stage functions (the analog of the reference's per-stage CLI flags,
     scripts/data_pipeline.sh:10-14), e.g.
     ``{"rematch": {"min_merged_duration": 0.0}}``.
     """
-    out: dict[str, DataFrame] = {}
     conf = stage_conf or {}
+    out: dict[str, DataFrame] = {}
+    owned = [
+        df for df in (audio, hosts)
+        if df is not None and df.storageLevel == StorageLevel.NONE
+    ]
+    for df in owned:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        for name, (up, fn) in STAGES.items():
+            if name not in stages or (name == "host_match" and hosts is None):
+                continue
+            upstream = None
+            if up is not None:
+                # Read the upstream table only when this call did not run it.
+                upstream = out[up] if up in out else _load(spark, os.path.join(workdir, up))
 
-    def path(stage: str) -> str:
-        return os.path.join(workdir, stage)
+            def stage_fn(todo, fn=fn, upstream=upstream, kw=conf.get(name, {})):
+                if upstream is not None:  # its rows for the pending files
+                    upstream = upstream.join(todo.select("audio_id").distinct(), "audio_id")
+                return fn(todo, upstream, hosts, **kw)
 
-    def upstream(stage: str) -> DataFrame:
-        # Read the stage's table only when this call did not run it.
-        return out[stage] if stage in out else _load(spark, path(stage))
-
-    if "vad" in stages:
-        out["vad"] = run_incremental_stage(
-            spark, audio, lambda a: st.vad_stage(a, **conf.get("vad", {})), path("vad")
-        )
-    if "separation" in stages:
-        vad = upstream("vad")
-
-        def sep(todo_audio: DataFrame) -> DataFrame:
-            scored, gaps = st.separation_stage(todo_audio, vad.join(
-                todo_audio.select("audio_id").distinct(), "audio_id"
-            ), **conf.get("separation", {}))
-            return scored.withColumn("kind", F.lit("window")).unionByName(
-                gaps.select(
-                    "audio_id", "start", "end",
-                    F.lit(None).cast("double").alias("v_r"),
-                    F.lit(None).cast("double").alias("nv_r"),
-                    F.lit("gap").alias("kind"),
-                )
-            )
-
-        out["separation"] = run_incremental_stage(spark, audio, sep, path("separation"))
-    if "diarization" in stages:
-        sep_tbl = upstream("separation")
-
-        def diar(todo_audio: DataFrame) -> DataFrame:
-            mine = sep_tbl.join(todo_audio.select("audio_id").distinct(), "audio_id")
-            scored = mine.where(F.col("kind") == "window").drop("kind")
-            gaps = mine.where(F.col("kind") == "gap").select("audio_id", "start", "end")
-            single, overlap = st.diarization_stage(scored, gaps, **conf.get("diarization", {}))
-            return single.withColumnRenamed("tag", "speaker").withColumn(
-                "overlapping", F.lit(False)
-            ).unionByName(
-                overlap.select(
-                    "audio_id",
-                    F.concat_ws("+", "tags").alias("speaker"),
-                    F.lit(True).alias("overlapping"),
-                    "start",
-                    "end",
-                )
-            )
-
-        out["diarization"] = run_incremental_stage(spark, audio, diar, path("diarization"))
-    if "rematch" in stages:
-        diar_tbl = upstream("diarization")
-
-        def rematch(todo_audio: DataFrame) -> DataFrame:
-            single = (
-                diar_tbl.join(todo_audio.select("audio_id").distinct(), "audio_id")
-                .where(~F.col("overlapping"))
-                .select("audio_id", "start", "end", F.col("speaker").alias("tag"))
-            )
-            merged, mapping = st.rematch_stage(
-                todo_audio, single, **conf.get("rematch", {})
-            )
-            return merged
-        out["rematch"] = run_incremental_stage(spark, audio, rematch, path("rematch"))
-    if "host_match" in stages and hosts is not None:
-        rem_tbl = upstream("rematch")
-
-        def match(todo_audio: DataFrame) -> DataFrame:
-            mine = rem_tbl.join(todo_audio.select("audio_id").distinct(), "audio_id")
-            return st.host_match_stage(
-                todo_audio, mine.drop("status", "error"), hosts,
-                **conf.get("host_match", {})
-            )
-
-        out["host_match"] = run_incremental_stage(spark, audio, match, path("host_match"))
-    return out
+            out[name] = run_incremental_stage(spark, audio, stage_fn, os.path.join(workdir, name))
+        return out
+    finally:
+        for df in owned:
+            df.unpersist()
 
 
 def _load(spark: SparkSession, path: str) -> DataFrame:

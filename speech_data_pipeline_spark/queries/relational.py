@@ -123,7 +123,7 @@ def j9_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Identical shape to `todo = inputs ANTI JOIN done` in the stage
     runner (plans/incremental.py); the status filter on the done-side
-    mirrors retry_failed semantics (failed outputs don't count as
+    mirrors its retry of failed keys (failed outputs don't count as
     done). Broadcast-able when the done-set is small; otherwise a
     shuffled hash anti-join.
     """

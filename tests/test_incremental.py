@@ -19,10 +19,6 @@ def test_pending_anti_join_and_retry(spark):
     )
     todo = sorted(r.audio_id for r in pending(inputs, done).collect())
     assert todo == ["b", "c"]  # failed rows retried
-    todo = sorted(
-        r.audio_id for r in pending(inputs, done, retry_failed=False).collect()
-    )
-    assert todo == ["c"]
 
 
 def test_run_incremental_stage_idempotent(spark):

@@ -103,6 +103,40 @@ def test_decode_wav_rejects_compressed():
         decode_wav_bytes(b"RIFF" + struct.pack("<I", len(body)) + body)
 
 
+@pytest.mark.parametrize(
+    "payload, name",
+    [
+        (b"ID3\x04\x00\x00\x00\x00\x00\x00mp3-body", "mp3: ID3"),
+        (b"\xff\xfb\x90\x00mp3-frame-junk", "mp3: MPEG"),
+        (b"\x00\x00\x00\x20ftypM4A \x00\x00\x00\x00", "mp4/m4a"),
+        (b"\xff\xf1\x50\x80\x02\x1f\xfcadts-junk", "aac: ADTS"),
+        (b"not audio at all", "unknown format"),
+    ],
+    ids=["id3", "mpeg-sync", "ftyp", "adts", "unknown"],
+)
+def test_decode_audio_bytes_names_unsupported_container(payload, name):
+    """A non-RIFF payload raises NotImplementedError naming the container
+    its magic bytes identify, not a pointer back to decode_audio_bytes."""
+    from speech_data_pipeline_spark.operators.multimodal import decode_audio_bytes
+
+    with pytest.raises(NotImplementedError, match=name) as e:
+        decode_audio_bytes(payload)
+    assert "use decode_audio_bytes" not in str(e.value)
+
+
+@pytest.mark.parametrize(
+    "cut",
+    [lambda w: b"RIFF\x00\x00", lambda w: w[:11], lambda w: w[:30],
+     lambda w: w[:12] + b"fmt \xff"],
+    ids=["riff-6-bytes", "riff-11-bytes", "truncated-fmt", "truncated-chunk-header"],
+)
+def test_decode_audio_bytes_malformed_riff_raises_valueerror(cut):
+    from speech_data_pipeline_spark.operators.multimodal import decode_audio_bytes
+
+    with pytest.raises(ValueError, match="malformed WAV"):
+        decode_audio_bytes(cut(make_wav(tone(64))))
+
+
 def test_decode_media_through_vad_stage(spark):
     """WAV bytes → decode_media → vad_stage: the full ingest seam with a
     real decoder, no fake flag."""

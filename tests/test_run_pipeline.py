@@ -3,13 +3,15 @@
 ``tests/golden/clips_seed1/`` (``tools/golden_tables.py``), at any
 shuffle partition count, and a rerun with nothing new leaves every
 table as it was. Equality is exact, as multisets of rows, with no
-tolerance.
+tolerance. A pass decodes each file once, and leaves nothing it
+persisted in the session's cache, whether it returns or raises.
 """
 
 import os
 
 import pandas as pd
 import pytest
+from pyspark import StorageLevel
 
 from speech_data_pipeline_spark.plans.pipeline import STAGE_ORDER, run_pipeline
 from speech_data_pipeline_spark.sources.audio import (
@@ -48,14 +50,31 @@ def clips(tmp_path_factory):
     return audio_dir, host_dir, manifest
 
 
-def run(spark, clips, workdir, **kw):
-    """One ``run_pipeline`` call over ``clips`` into ``workdir``; returns
-    the number of corpus files the glue decoded."""
+def inputs(spark, clips, files):
     sc = spark.sparkContext
-    files = sc.accumulator(0)
     audio = decoded(scan_audio_dir(spark, clips[0]), "audio_id", files)
     hosts = decoded(scan_reference_voiceprints(spark, clips[1]), "host_id", sc.accumulator(0))
-    run_pipeline(spark, audio, workdir, hosts=hosts, **kw)
+    return audio, hosts
+
+
+def persisted_rdds(spark):
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def assert_nothing_left_cached(spark, frames, n_rdds):
+    assert all(df.storageLevel == StorageLevel.NONE for df in frames)
+    assert persisted_rdds(spark) == n_rdds
+
+
+def run(spark, clips, workdir):
+    """One ``run_pipeline`` call over ``clips`` into ``workdir``; returns
+    the number of corpus files the glue decoded. Checks that the call
+    leaves nothing cached."""
+    files = spark.sparkContext.accumulator(0)
+    audio, hosts = inputs(spark, clips, files)
+    n_rdds = persisted_rdds(spark)
+    run_pipeline(spark, audio, workdir, hosts=hosts)
+    assert_nothing_left_cached(spark, (audio, hosts), n_rdds)
     return files.value
 
 
@@ -103,3 +122,29 @@ def test_cold_pass_at_one_shuffle_partition_equals_golden_tables(spark, clips, t
 
 def test_rerun_with_nothing_new_leaves_tables_equal(passes):
     assert_tables_equal(passes["noop"], passes["cold"])
+
+
+def test_each_file_decoded_once_per_pass(passes, clips):
+    n_files = len(clips[2])
+    assert passes["cold_files"] == n_files
+    assert passes["noop_files"] <= n_files
+
+
+def test_raising_pass_leaves_nothing_cached(spark, clips, tmp_path):
+    audio, hosts = inputs(spark, clips, spark.sparkContext.accumulator(0))
+    n_rdds = persisted_rdds(spark)
+    with pytest.raises(TypeError, match="bogus"):
+        run_pipeline(
+            spark, audio, str(tmp_path), hosts=hosts, stage_conf={"separation": {"bogus": 1}}
+        )
+    assert_nothing_left_cached(spark, (audio, hosts), n_rdds)
+
+
+def test_caller_cache_is_left_in_place(spark, tmp_path):
+    """A frame the caller cached stays cached after the call."""
+    audio = spark.createDataFrame([], "audio_id string, samples array<double>, sr int").cache()
+    try:
+        run_pipeline(spark, audio, str(tmp_path), stages=("vad",))
+        assert audio.storageLevel != StorageLevel.NONE
+    finally:
+        audio.unpersist()
