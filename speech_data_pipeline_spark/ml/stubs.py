@@ -113,32 +113,56 @@ def vad(df: DataFrame, threshold: float = 0.01, min_gap: float = 0.02) -> DataFr
 
 
 # --------------------------------------------------------------------------
-# M2: source separation — waveform → (vocal, nonvocal) energy split
+# M2: source separation — waveform → per-window (vocal, nonvocal) energy
 # --------------------------------------------------------------------------
 
+SEP_SCHEMA = "audio_id string, win_start long, win_end long, v_e double, nv_e double"
 
-def separate(df: DataFrame, gate: float = 0.1) -> DataFrame:
-    """Separation stub: amplitude gate — samples with |x| >= ``gate`` go
-    to the vocal track, the rest to nonvocal (M2 analog, deterministic).
-    Adds ``vocal`` and ``nonvocal`` array columns alongside the input."""
+
+def separate(df: DataFrame, windows: DataFrame, gate: float = 0.1) -> DataFrame:
+    """Separation stub scored per window (M2 analog, deterministic).
+
+    An amplitude gate splits each file's samples: those with
+    ``|x| >= gate`` form the vocal track, the rest the nonvocal one.
+    Each window ``(audio_id, win_start, win_end)`` (µs) of ``windows``
+    gets the energy of both tracks over its ``int((win_end - win_start)
+    / 1e6 * sr)`` samples from ``int(win_start / 1e6 * sr)`` on: one
+    output row ``(audio_id, win_start, win_end, v_e, nv_e)``.
+
+    Input ``df``: ``(audio_id, samples, sr)``. One per-file kernel does
+    the gating and the scoring: a file's windows reach its samples as
+    one array, so no row carries a whole track. Each energy is summed in
+    sample order (``np.cumsum(...)[-1]``), the same left fold as Spark's
+    ``aggregate``, so the sums are bit-identical to it.
+    """
+    per_file = windows.groupBy("audio_id").agg(
+        F.collect_list(F.struct("win_start", "win_end")).alias("wins")
+    )
+
+    def energy(track: np.ndarray) -> float:
+        return float(np.cumsum(track * track)[-1]) if len(track) else 0.0
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         load_backend("separator")
         for pdf in batches:
-            voc, nvoc = [], []
-            for samples in pdf["samples"]:
+            rows = []
+            for aid, samples, sr, wins in zip(
+                pdf["audio_id"], pdf["samples"], pdf["sr"], pdf["wins"]
+            ):
                 x = np.asarray(samples, dtype=np.float64)
                 mask = np.abs(x) >= gate
-                voc.append(np.where(mask, x, 0.0).tolist())
-                nvoc.append(np.where(mask, 0.0, x).tolist())
-            out = pdf[["audio_id", "sr"]].copy()
-            out["vocal"] = voc
-            out["nonvocal"] = nvoc
-            yield out
+                voc, nvoc = np.where(mask, x, 0.0), np.where(mask, 0.0, x)
+                for w in wins:
+                    s, e = int(w["win_start"]), int(w["win_end"])
+                    i = int(s / 1e6 * sr)
+                    n = int((e - s) / 1e6 * sr)
+                    rows.append((aid, s, e, energy(voc[i:i + n]), energy(nvoc[i:i + n])))
+            yield pd.DataFrame(rows, columns=["audio_id", "win_start", "win_end", "v_e", "nv_e"])
 
-    return df.mapInPandas(
-        kernel,
-        schema="audio_id string, sr int, vocal array<double>, nonvocal array<double>",
+    return (
+        df.select("audio_id", "samples", "sr")
+        .join(per_file, "audio_id")
+        .mapInPandas(kernel, schema=SEP_SCHEMA)
     )
 
 
@@ -288,9 +312,11 @@ def verify_pairs(df: DataFrame, a_col: str = "emb_a", b_col: str = "emb_b") -> D
 
         return pd.Series([cos(p) for p in zip(a, b)])
 
-    return df.withColumn("score", _cos(F.col(a_col), F.col(b_col))).withColumn(
-        "prediction", F.col("score") > 0.25
-    )
+    # Nondeterministic only to the optimizer: it keeps a filter on
+    # ``score`` above this projection, so ``_cos`` runs once per pair
+    # instead of again inside the pushed-down filter.
+    score = _cos.asNondeterministic()(F.col(a_col), F.col(b_col))
+    return df.withColumn("score", score).withColumn("prediction", F.col("score") > 0.25)
 
 
 # --------------------------------------------------------------------------

@@ -395,7 +395,9 @@ def decode_wav_bytes(
     A non-RIFF payload raises ``NotImplementedError`` naming the
     container its magic bytes identify (mp3, mp4/m4a, aac), as does a
     RIFF payload of another form or a compressed WAV format tag; a
-    truncated or malformed RIFF/WAV payload raises ``ValueError``.
+    truncated or malformed RIFF/WAV payload raises ``ValueError``,
+    including a data chunk shorter than its declared size or ending in a
+    partial sample frame.
     """
     import struct
 
@@ -415,6 +417,12 @@ def decode_wav_bytes(
     fmt6, data_off, data_size = _walk_riff(b)
     audio_format, n_ch, sr, _brate, _balign, bits = fmt6
     data = b[data_off : data_off + data_size]
+    frame = n_ch * bits // 8 if audio_format in (1, 3, 6, 7) and bits % 8 == 0 else 0
+    if len(data) < data_size or (frame and len(data) % frame):
+        raise ValueError(
+            f"malformed WAV: truncated data chunk ({len(data)} bytes present, "
+            f"{data_size} declared, {frame or 'n/a'}-byte sample frames)"
+        )
     if audio_format == 0x11:  # IMA/DVI ADPCM: block-coded, per-channel
         if _balign < 4 * n_ch:
             raise ValueError("malformed ADPCM WAV: block align < header")

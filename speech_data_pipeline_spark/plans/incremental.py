@@ -4,9 +4,13 @@ The reference's only recovery mechanism is ``skip_if_exist`` (per-file
 output-existence checks in every stage) plus per-file try/except
 counters. The engine's equivalents:
 
-- ``pending``      — ``inputs LEFT ANTI JOIN done`` on ``audio_id``: the
-  incremental-processing primitive. One scan of the done-keys column
-  (column-pruned), broadcast when small.
+- ``pending_keys`` — the incremental-processing primitive (J9): the
+  given ``audio_id``s that have no ``status = 'ok'`` row in a stage
+  table, as a list the Spark driver holds. One job with no shuffle
+  reads the key column of the table's ok rows, and the driver drops
+  duplicates; no job runs while the table does not exist yet.
+- ``pending``      — the rows of a frame whose ``audio_id`` is pending:
+  a filter on that key list, so no join and no exchange.
 - ``run_incremental_stage`` — compute only pending rows, append results
   to the stage table. Failures are **rows, not control flow**: the
   stage function may emit a ``status``/``error`` column pair, and a
@@ -14,36 +18,46 @@ counters. The engine's equivalents:
 - ``stage_counters`` — the A7 completed/failed report as one grouped
   aggregate instead of per-file exception counting.
 
-Each stage evaluates ``inputs`` twice: the emptiness check of its
-pending rows, then the stage itself. ``plans/pipeline.run_pipeline``
-persists its decoded audio for the whole call, so both, in all five
-stages, read one decoded copy.
-
-At 100 TB the done-set is a Delta/parquet table partitioned like the
-input; the anti-join prunes to key columns and broadcasts when the
-done-set fits (the common incremental case: small delta of new files).
+The keys live on the Spark driver, and each stage's filter carries its
+pending keys as a literal list. Reading the done keys brings one key
+per ok row, a few per file in this pipeline's tables, to the driver.
+That suits listings the driver can hold; for far larger ones the done
+set belongs in a per-file ledger table that a semi-join reads.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def pending(inputs: DataFrame, done: DataFrame | None) -> DataFrame:
-    """Rows of ``inputs`` whose ``audio_id`` is absent from ``done`` (J9).
+def listed_keys(inputs: DataFrame) -> list[str]:
+    """The distinct ``audio_id``s of ``inputs``, in first-seen order:
+    one job."""
+    return list(dict.fromkeys(r[0] for r in inputs.select("audio_id").collect()))
 
-    Done rows whose ``status != 'ok'`` do not count as done, so failed
-    keys re-enter the work set.
-    """
-    if done is None:
-        return inputs
-    if "status" in done.columns:
-        done = done.where(F.col("status") == "ok")
-    return inputs.join(done.select("audio_id").distinct(), "audio_id", "left_anti")
+
+def pending_keys(spark: SparkSession, keys: Iterable[str], out_path: str) -> list[str]:
+    """``keys``, in order, less those with a ``status = 'ok'`` row in
+    the stage table at ``out_path`` (J9). Failed keys re-enter the work
+    set. No Spark job runs when the table does not exist yet."""
+    done: set[str] = set()
+    if os.path.exists(out_path):
+        table = spark.read.schema("audio_id string, status string").parquet(out_path)
+        done = {
+            r[0]
+            for r in table.where(F.col("status") == "ok").select("audio_id").collect()
+        }
+    return [k for k in keys if k not in done]
+
+
+def pending(inputs: DataFrame, keys: Iterable[str]) -> DataFrame:
+    """Rows of ``inputs`` whose ``audio_id`` is one of the pending
+    ``keys``: a filter, with no join and no exchange."""
+    return inputs.where(F.col("audio_id").isin(list(keys)))
 
 
 def stage_counters(stage_out: DataFrame, key: str = "audio_id") -> DataFrame:
@@ -60,27 +74,34 @@ def run_incremental_stage(
     inputs: DataFrame,
     stage_fn: Callable[[DataFrame], DataFrame],
     out_path: str,
+    keys: list[str] | None = None,
 ) -> DataFrame:
     """Run ``stage_fn`` over not-yet-done inputs; append to ``out_path``.
 
-    ``stage_fn`` must return a DataFrame containing ``audio_id`` and may
-    include ``status``/``error`` columns (defaulted to 'ok'/null).
-    Returns the full stage table after the append. Idempotent: a second
-    call with the same inputs computes nothing new.
+    ``keys`` are the pending ``audio_id``s when the caller has computed
+    them with :func:`pending_keys` (``run_pipeline`` does, from one
+    listing per call); by default they are computed here from
+    :func:`listed_keys` of ``inputs``. ``stage_fn`` gets
+    ``pending(inputs, keys)`` and is not called when no key is pending.
+    It must return a DataFrame containing ``audio_id`` and may include
+    ``status``/``error`` columns (defaulted to 'ok'/null). Returns the
+    full stage table after the append. Idempotent: a second call with
+    the same inputs computes nothing new.
     """
-    done = None
-    if os.path.exists(out_path):
-        done = spark.read.parquet(out_path)
-    todo = pending(inputs, done)
-    if todo.isEmpty():
-        return done if done is not None else spark.createDataFrame([], "audio_id string")
-    out = stage_fn(todo)
+    if keys is None:
+        keys = pending_keys(spark, listed_keys(inputs), out_path)
+    if not keys:
+        if os.path.exists(out_path):
+            return spark.read.parquet(out_path)
+        return spark.createDataFrame([], "audio_id string")
+    out = stage_fn(pending(inputs, keys))
     if "status" not in out.columns:
         out = out.withColumn("status", F.lit("ok")).withColumn(
             "error", F.lit(None).cast("string")
         )
     out.write.mode("append").parquet(out_path)
-    return spark.read.parquet(out_path)
+    # the schema just written: reading it back infers nothing (no job)
+    return spark.read.schema(out.schema).parquet(out_path)
 
 
 def aggregate_delta(
@@ -108,7 +129,7 @@ def merge_aggregate_state(
     """Merge a delta partial-aggregate into the running state:
     full-outer on the keys, coalesce + add every measure. Idempotence
     is the CALLER's contract (feed each batch exactly once — pair with
-    :func:`pending`'s anti-join to guarantee it); associativity and
+    :func:`pending_keys` to guarantee it); associativity and
     commutativity are the algebra's (sums/counts), so late or
     out-of-order deltas merge to the same state.
 

@@ -6,8 +6,8 @@ per stage per dataset, exchanging JSON files under
 ``{audio}_outputs/{stage}/`` (scripts/data_pipeline.sh:18-70,
 modules/models/utils.py:190-195) — becomes: one SparkSession, one
 keyed table per stage under ``workdir/{stage}``, each stage running
-only for keys absent from its table (plans/incremental.pending). Stage
-gating (run_vad/run_sep_filter/... flags, sh:10-14) maps to the
+only for keys absent from its table (plans/incremental.pending_keys).
+Stage gating (run_vad/run_sep_filter/... flags, sh:10-14) maps to the
 ``stages`` argument.
 
 ``STAGES`` is the pipeline as data: each stage names its upstream stage
@@ -25,7 +25,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.plans import stages as st
-from speech_data_pipeline_spark.plans.incremental import run_incremental_stage
+from speech_data_pipeline_spark.plans.incremental import (
+    listed_keys,
+    pending_keys,
+    run_incremental_stage,
+)
+
+#: The local properties ``SparkContext.setJobGroup`` sets.
+_JOB_GROUP_PROPERTIES = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"
+)
 
 
 def _vad(audio: DataFrame, _up, _hosts, **kw) -> DataFrame:
@@ -47,18 +56,7 @@ def _separation(audio: DataFrame, vad: DataFrame, _hosts, **kw) -> DataFrame:
 def _diarization(audio: DataFrame, sep: DataFrame, _hosts, **kw) -> DataFrame:
     scored = sep.where(F.col("kind") == "window").drop("kind")
     gaps = sep.where(F.col("kind") == "gap").select("audio_id", "start", "end")
-    single, overlap = st.diarization_stage(scored, gaps, **kw)
-    return single.withColumnRenamed("tag", "speaker").withColumn(
-        "overlapping", F.lit(False)
-    ).unionByName(
-        overlap.select(
-            "audio_id",
-            F.concat_ws("+", "tags").alias("speaker"),
-            F.lit(True).alias("overlapping"),
-            "start",
-            "end",
-        )
-    )
+    return st.diarization_stage(scored, gaps, **kw)
 
 
 def _rematch(audio: DataFrame, diar: DataFrame, _hosts, **kw) -> DataFrame:
@@ -99,10 +97,21 @@ def run_pipeline(
     per stage; stage tables append idempotently. ``host_match`` runs
     only when ``hosts`` is given.
 
+    One job collects the ``audio_id``s of ``audio`` per call. Each stage
+    then takes its pending keys on the Spark driver (those without an
+    ``ok`` row in its table, read with no job while the table does not
+    exist) and gets ``audio`` and its upstream's rows filtered to those
+    keys: no anti-join, no emptiness probe and no key exchange. A stage
+    with nothing pending only reads its table: the keys, and the schema
+    of the table it returns.
+
     ``audio`` and ``hosts`` are persisted for the length of the call
     (unless the caller already cached them) and released when it ends,
-    so every stage, pending anti-join and emptiness check reads one
-    decoded copy: a pass decodes each file once, not once per job.
+    so the listing and every stage read one decoded copy: a pass
+    decodes each file once, not once per job.
+
+    Each stage's jobs run in the job group ``pipeline:<stage>``; the
+    caller's job group is restored when the call ends.
 
     ``stage_conf`` passes per-stage keyword overrides straight to the
     stage functions (the analog of the reference's per-stage CLI flags,
@@ -111,6 +120,8 @@ def run_pipeline(
     """
     conf = stage_conf or {}
     out: dict[str, DataFrame] = {}
+    sc = spark.sparkContext
+    caller_group = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPERTIES}
     owned = [
         df for df in (audio, hosts)
         if df is not None and df.storageLevel == StorageLevel.NONE
@@ -118,22 +129,28 @@ def run_pipeline(
     for df in owned:
         df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
+        ids = listed_keys(audio)
         for name, (up, fn) in STAGES.items():
             if name not in stages or (name == "host_match" and hosts is None):
                 continue
+            sc.setJobGroup(f"pipeline:{name}", name)
+            path = os.path.join(workdir, name)
             upstream = None
             if up is not None:
                 # Read the upstream table only when this call did not run it.
                 upstream = out[up] if up in out else _load(spark, os.path.join(workdir, up))
+            keys = pending_keys(spark, ids, path)
 
-            def stage_fn(todo, fn=fn, upstream=upstream, kw=conf.get(name, {})):
+            def stage_fn(todo, fn=fn, upstream=upstream, keys=keys, kw=conf.get(name, {})):
                 if upstream is not None:  # its rows for the pending files
-                    upstream = upstream.join(todo.select("audio_id").distinct(), "audio_id")
+                    upstream = upstream.where(F.col("audio_id").isin(keys))
                 return fn(todo, upstream, hosts, **kw)
 
-            out[name] = run_incremental_stage(spark, audio, stage_fn, os.path.join(workdir, name))
+            out[name] = run_incremental_stage(spark, audio, stage_fn, path, keys=keys)
         return out
     finally:
+        for k, v in caller_group.items():
+            sc.setLocalProperty(k, v)
         for df in owned:
             df.unpersist()
 

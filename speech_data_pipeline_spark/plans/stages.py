@@ -5,15 +5,20 @@ Each stage is DataFrame→DataFrame; the shell-script orchestration of
 the reference (scripts/data_pipeline.sh:18-70, one process + JSON files
 per stage) collapses into one lineage with optional parquet checkpoints
 between stages. The ``audio_id`` partition key flows through every
-stage, so the session/sweep kernels and interval joins all shuffle at
-most once.
+stage: the session and sweep kernels, windows and aggregates that need
+a file's rows together shuffle on it. A sub-plan that two branches of a
+stage need is computed once: the separation kernel scores every window
+of a file in one call, diarization projects its sweep once, rematch
+counts chunks on the exchange its clustering uses, and host matching
+reuses its per-speaker table's exchanges in both branches.
 
 Stage ↔ reference trace map:
   vad_stage          → §3.2 (scan → VAD M1 → pad/clamp F11 → merge W1)
   separation_stage   → separation_filter.py: lead-gap J4 + windows W4 +
-                       energy A5/A6 + ratio projections
+                       per-file separation M2 and energy A5/A6 + ratio
+                       projections
   diarization_stage  → §3.3 (vocal combine F1/F2/U1/W9/W1 →
-                       diarize M3 → sweep W3 → split F5)
+                       diarize M3 → sweep W3 → overlap flag F5)
   rematch_stage      → speaker_rematch.py: chunk F3/F4 → embed M4 →
                        per-file cluster M5 → relabel X3 → merge W2 →
                        mapping join J6, guards F9/F10
@@ -33,10 +38,7 @@ from speech_data_pipeline_spark.operators.sessions import (
     sessionize_capped,
     sessionize_gap,
 )
-from speech_data_pipeline_spark.operators.sweepline import (
-    flatten_active_sets,
-    split_single_overlap,
-)
+from speech_data_pipeline_spark.operators.sweepline import flatten_active_sets
 from speech_data_pipeline_spark.operators.windows import (
     budgeted_topk,
     sliding_windows,
@@ -74,7 +76,6 @@ def separation_stage(
     hop: float = 1.0,
 ) -> tuple[DataFrame, DataFrame]:
     """VAD segments → (windowed vocal-ratio table, gap/nonvad table)."""
-    sep = stubs.separate(audio)
     wins = sliding_windows(
         vad.withColumn("start_us", _us(F.col("start"))).withColumn(
             "end_us", _us(F.col("end"))
@@ -83,22 +84,10 @@ def separation_stage(
         hop=int(hop * 1e6),
         key="audio_id",
     )
-
-    def seg_energy(arr_col: str, s_col, e_col):
-        sliced = F.expr(
-            f"slice({arr_col}, cast({s_col} / 1e6 * sr as int) + 1, "
-            f"cast(({e_col} - {s_col}) / 1e6 * sr as int))"
-        )
-        return F.aggregate(sliced, F.lit(0.0), lambda a, x: a + x * x)
-
+    total = F.col("v_e") + F.col("nv_e")
     scored = (
-        wins.join(sep, "audio_id")
-        .withColumn("v_e", seg_energy("vocal", "win_start", "win_end"))
-        .withColumn("nv_e", seg_energy("nonvocal", "win_start", "win_end"))
-        .withColumn(
-            "v_r",
-            F.when(F.col("v_e") + F.col("nv_e") > 0, F.col("v_e") / (F.col("v_e") + F.col("nv_e"))).otherwise(0.0),
-        )
+        stubs.separate(audio, wins)
+        .withColumn("v_r", F.when(total > 0, F.col("v_e") / total).otherwise(0.0))
         .withColumn("nv_r", 1 - F.col("v_r"))
         .select(
             "audio_id",
@@ -128,8 +117,14 @@ def diarization_stage(
     v_r_threshold: float = 0.5,
     max_chunk: float = 1000.0,
     join_interval: float = 5.0,
-) -> tuple[DataFrame, DataFrame]:
-    """Windowed scores + gaps → single/overlap speaker segment tables."""
+) -> DataFrame:
+    """Windowed scores + gaps → speaker segment table.
+
+    One row per flattened timeline piece: ``(audio_id, speaker, start,
+    end, overlapping)``, where ``speaker`` is the active tags joined by
+    ``+`` and ``overlapping`` says more than one is active (F5). A
+    single projection of the sweep, so the chain under it runs once.
+    """
     vocal = scored.where(F.col("v_r") >= v_r_threshold).select(
         "audio_id", "start", "end", F.lit("voice").alias("seg_type")
     )
@@ -159,11 +154,13 @@ def diarization_stage(
         .withColumnRenamed("speaker", "tag"),
         key="audio_id",
     )
-    single, overlap = split_single_overlap(flat)
-    to_sec = lambda df: df.withColumn(  # noqa: E731
-        "start", F.col("piece_start") / 1e6
-    ).withColumn("end", F.col("piece_end") / 1e6).drop("piece_start", "piece_end")
-    return to_sec(single), to_sec(overlap)
+    return flat.select(
+        "audio_id",
+        F.concat_ws("+", "tags").alias("speaker"),
+        (F.col("piece_start") / 1e6).alias("start"),
+        (F.col("piece_end") / 1e6).alias("end"),
+        (F.col("n_active") > 1).alias("overlapping"),
+    )
 
 
 def rematch_stage(
@@ -195,14 +192,15 @@ def rematch_stage(
         F.col("tag").alias("local_speaker"),
         "samples",
     )
-    emb = stubs.embed(sliced).drop("samples")
-    enough = (
-        emb.groupBy("audio_id")
-        .agg(F.count(F.lit(1)).alias("n_chunks"))
+    # files with enough chunks: a count over the file, whose exchange on
+    # ``audio_id`` the per-file clustering reuses
+    n_chunks = F.count(F.lit(1)).over(Window.partitionBy("audio_id"))
+    emb = (
+        stubs.embed(sliced).drop("samples")
+        .withColumn("n_chunks", n_chunks)
         .where(F.col("n_chunks") >= min_chunks)
-        .select("audio_id")
+        .drop("n_chunks")
     )
-    emb = emb.join(F.broadcast(enough), "audio_id")
     labeled = stubs.cluster_per_group(emb, key="audio_id", backend=cluster_backend)
     # noise chunks (-1, from the dbscan backend) map to the reference's
     # "unknown" label (speaker_rematch.py:144), not a speaker id
@@ -262,9 +260,16 @@ def host_match_stage(
     At scale this is the knob that keeps the expensive slice→embed→
     verify path off the hosts-dominated bulk of the corpus; the
     heuristics themselves are one window over the per-speaker duration
-    table (one shuffle on ``audio_id``, no model calls).
+    table (one shuffle on ``audio_id``, no model calls), computed once
+    for both branches.
     """
-    durs = rematched.withColumn("dur", F.col("end") - F.col("start"))
+    # A row without a key belongs to no file. Dropping it here, and not
+    # only where the semi-join below infers that filter on its stats
+    # side, gives both branches the same stats sub-plan, so Spark runs
+    # its two shuffles once and reuses them in the other branch.
+    durs = rematched.where(F.col("audio_id").isNotNull()).withColumn(
+        "dur", F.col("end") - F.col("start")
+    )
     shortcut_matches = None
     if early_exit:
         w_all = Window.partitionBy("audio_id")

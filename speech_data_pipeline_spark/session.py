@@ -12,8 +12,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def _default_driver_memory() -> str:
     """Half the host's physical memory, capped at 48g: a local-mode
@@ -32,14 +30,16 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[$SPARK_GRAFT_CPUS]``. ``SPARK_GRAFT_CPUS`` (default
+    32) is read at each call, for the master and for the default
+    ``spark.sql.shuffle.partitions`` alike.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

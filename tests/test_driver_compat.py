@@ -11,6 +11,7 @@ import os
 import subprocess
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -83,3 +84,33 @@ def test_default_driver_memory_fits_the_host(spark):
     physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     heap = spark.sparkContext.getConf().get("spark.driver.memory")
     assert _jvm_bytes(heap) <= physical, (heap, physical)
+
+
+def test_shuffle_partitions_follow_cpus_set_after_import(monkeypatch):
+    """``get_spark`` reads ``SPARK_GRAFT_CPUS`` when it is called, for
+    the shuffle partitions as for the master, so a caller that sets it
+    after importing the package gets ``local[n]`` with n-way exchanges."""
+    from speech_data_pipeline_spark import session
+
+    conf = {}
+
+    class Builder:
+        def appName(self, _name):
+            return self
+
+        def config(self, key, value):
+            conf[key] = value
+            return self
+
+        def master(self, value):
+            return self.config("master", value)
+
+        def getOrCreate(self):
+            return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda _level: None))
+
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    session.get_spark("t")
+    assert conf["master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "3"

@@ -7,18 +7,21 @@ from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.plans.incremental import (
     pending,
+    pending_keys,
     run_incremental_stage,
     stage_counters,
 )
 
 
-def test_pending_anti_join_and_retry(spark):
-    inputs = spark.createDataFrame([("a",), ("b",), ("c",)], ["audio_id"])
-    done = spark.createDataFrame(
+def test_pending_keys_skip_done_and_retry_failed(spark, tmp_path):
+    table = str(tmp_path / "stage")
+    spark.createDataFrame(
         [("a", "ok"), ("b", "failed")], ["audio_id", "status"]
-    )
-    todo = sorted(r.audio_id for r in pending(inputs, done).collect())
-    assert todo == ["b", "c"]  # failed rows retried
+    ).write.parquet(table)
+    assert pending_keys(spark, ["c", "a", "b"], table) == ["c", "b"]  # failed rows retried
+    assert pending_keys(spark, ["c", "a"], str(tmp_path / "absent")) == ["c", "a"]
+    inputs = spark.createDataFrame([("a",), ("b",), ("c",)], ["audio_id"])
+    assert sorted(r.audio_id for r in pending(inputs, ["b", "c"]).collect()) == ["b", "c"]
 
 
 def test_run_incremental_stage_idempotent(spark):

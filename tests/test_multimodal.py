@@ -137,6 +137,25 @@ def test_decode_audio_bytes_malformed_riff_raises_valueerror(cut):
         decode_audio_bytes(cut(make_wav(tone(64))))
 
 
+@pytest.mark.parametrize("size", [744, 743], ids=["whole-frames", "partial-frame"])
+def test_decode_wav_truncated_data_chunk_raises_valueerror(size):
+    """A 400-sample 16-bit WAV (844 bytes) cut short is reported as
+    truncated, not decoded to fewer samples or failed inside NumPy."""
+    payload = make_wav(tone(400))
+    assert len(payload) == 844
+    with pytest.raises(ValueError, match="malformed WAV: truncated data chunk"):
+        decode_wav_bytes(payload[:size])
+
+
+def test_decode_wav_partial_sample_frame_raises_valueerror():
+    """A data chunk whose declared size ends inside a sample frame."""
+    payload = bytearray(make_wav(tone(400)))
+    data_at = payload.index(b"data") + 4
+    payload[data_at : data_at + 4] = struct.pack("<I", 799)
+    with pytest.raises(ValueError, match="malformed WAV: truncated data chunk"):
+        decode_wav_bytes(bytes(payload))
+
+
 def test_decode_media_through_vad_stage(spark):
     """WAV bytes → decode_media → vad_stage: the full ingest seam with a
     real decoder, no fake flag."""

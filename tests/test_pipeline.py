@@ -6,6 +6,7 @@ reference's shapes and invariants.
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.plans.stages import (
     diarization_stage,
@@ -39,7 +40,11 @@ def stages(spark):
     audio = synth_audio(spark)
     vad = vad_stage(audio)
     scored, gaps = separation_stage(audio, vad)
-    single, overlap = diarization_stage(scored, gaps)
+    diar = diarization_stage(scored, gaps)
+    single = (
+        diar.where(~F.col("overlapping")).withColumnRenamed("speaker", "tag").drop("overlapping")
+    )
+    overlap = diar.where(F.col("overlapping"))
     # toy fixture timescales: 1-2 s merged spans, so relax the reference's
     # 3 s post-merge drop (its default is asserted in
     # test_rematch_min_merged_duration_filter)

@@ -4,7 +4,10 @@
 shuffle partition count, and a rerun with nothing new leaves every
 table as it was. Equality is exact, as multisets of rows, with no
 tolerance. A pass decodes each file once, and leaves nothing it
-persisted in the session's cache, whether it returns or raises.
+persisted in the session's cache, whether it returns or raises. Each
+stage runs its Spark jobs in the job group ``pipeline:<stage>``; a cold
+pass stays under a per-stage job ceiling, and a rerun with nothing new
+only reads each stage table: its ok keys and its schema.
 """
 
 import os
@@ -22,6 +25,14 @@ from tools.golden_tables import table_lines
 
 SEED = 1
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", f"clips_seed{SEED}")
+#: Most Spark jobs each stage may launch in a cold pass over the corpus
+#: (52 in all while each stage anti-joined the decoded audio, probed it
+#: with ``isEmpty()`` and ran its shared sub-plans once per branch).
+COLD_JOB_CEILINGS = {"vad": 3, "separation": 4, "diarization": 3, "rematch": 4, "host_match": 13}
+#: A stage with nothing pending reads its table twice: the keys of its
+#: ``ok`` rows, and the schema of the table it returns.
+NOOP_JOBS_PER_STAGE = 2
+CALLER_GROUP = "caller"
 
 
 def decoded(df, id_col, files):
@@ -66,16 +77,32 @@ def assert_nothing_left_cached(spark, frames, n_rdds):
     assert persisted_rdds(spark) == n_rdds
 
 
+def stage_jobs(spark):
+    tracker = spark.sparkContext.statusTracker()
+    return {s: set(tracker.getJobIdsForGroup(f"pipeline:{s}")) for s in STAGE_ORDER}
+
+
 def run(spark, clips, workdir):
-    """One ``run_pipeline`` call over ``clips`` into ``workdir``; returns
-    the number of corpus files the glue decoded. Checks that the call
-    leaves nothing cached."""
-    files = spark.sparkContext.accumulator(0)
+    """One ``run_pipeline`` call over ``clips`` into ``workdir``, from a
+    caller in job group ``CALLER_GROUP``; returns the number of corpus
+    files the glue decoded and the number of jobs each stage launched.
+    Checks that the call leaves nothing cached and restores the
+    caller's job group."""
+    sc = spark.sparkContext
+    files = sc.accumulator(0)
     audio, hosts = inputs(spark, clips, files)
     n_rdds = persisted_rdds(spark)
-    run_pipeline(spark, audio, workdir, hosts=hosts)
+    before = stage_jobs(spark)
+    sc.setJobGroup(CALLER_GROUP, "test")
+    try:
+        run_pipeline(spark, audio, workdir, hosts=hosts)
+        assert sc.getLocalProperty("spark.jobGroup.id") == CALLER_GROUP
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert_nothing_left_cached(spark, (audio, hosts), n_rdds)
-    return files.value
+    after = stage_jobs(spark)
+    return files.value, {s: len(after[s] - before[s]) for s in STAGE_ORDER}
 
 
 def tables(workdir):
@@ -100,10 +127,13 @@ def assert_tables_equal(got, want):
 def passes(spark, clips, tmp_path_factory):
     """A cold pass, then a rerun with nothing new into the same workdir."""
     workdir = str(tmp_path_factory.mktemp("stages"))
-    cold_files = run(spark, clips, workdir)
+    cold_files, cold_jobs = run(spark, clips, workdir)
     cold = tables(workdir)
-    noop_files = run(spark, clips, workdir)
-    return dict(cold=cold, cold_files=cold_files, noop=tables(workdir), noop_files=noop_files)
+    noop_files, noop_jobs = run(spark, clips, workdir)
+    return dict(
+        cold=cold, cold_files=cold_files, cold_jobs=cold_jobs,
+        noop=tables(workdir), noop_files=noop_files, noop_jobs=noop_jobs,
+    )
 
 
 def test_cold_pass_equals_golden_tables(passes):
@@ -130,6 +160,15 @@ def test_each_file_decoded_once_per_pass(passes, clips):
     assert passes["noop_files"] <= n_files
 
 
+def test_cold_pass_jobs_per_stage_under_ceiling(passes):
+    jobs = passes["cold_jobs"]
+    assert all(0 < jobs[s] <= COLD_JOB_CEILINGS[s] for s in STAGE_ORDER), jobs
+
+
+def test_rerun_with_nothing_new_only_reads_stage_tables(passes):
+    assert passes["noop_jobs"] == {s: NOOP_JOBS_PER_STAGE for s in STAGE_ORDER}
+
+
 def test_raising_pass_leaves_nothing_cached(spark, clips, tmp_path):
     audio, hosts = inputs(spark, clips, spark.sparkContext.accumulator(0))
     n_rdds = persisted_rdds(spark)
@@ -138,6 +177,7 @@ def test_raising_pass_leaves_nothing_cached(spark, clips, tmp_path):
             spark, audio, str(tmp_path), hosts=hosts, stage_conf={"separation": {"bogus": 1}}
         )
     assert_nothing_left_cached(spark, (audio, hosts), n_rdds)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
 
 
 def test_caller_cache_is_left_in_place(spark, tmp_path):
