@@ -304,7 +304,10 @@ def verify_pairs(df: DataFrame, a_col: str = "emb_a", b_col: str = "emb_b") -> D
         load_backend("verifier")
 
         def cos(p):
-            x, y = np.asarray(p[0], float), np.asarray(p[1], float)
+            # Fresh copies: on arrays that view the Arrow batch in place,
+            # the dot product's rounding depends on their position in it.
+            x = np.array(p[0], dtype=float, copy=True)
+            y = np.array(p[1], dtype=float, copy=True)
             nx, ny = np.linalg.norm(x), np.linalg.norm(y)
             if nx == 0 or ny == 0:
                 return 0.0

@@ -1,8 +1,8 @@
 """``run_pipeline`` end to end over perfbench's seeded clips corpus
-(seed 1): a cold pass writes exactly the golden stage tables under
-``tests/golden/clips_seed1/`` (``tools/golden_tables.py``), at any
-shuffle partition count, and a rerun with nothing new leaves every
-table as it was. Equality is exact, as multisets of rows, with no
+(seeds 1-3): a cold pass writes exactly the golden stage tables under
+``tests/golden/clips_seed<seed>/`` (``tools/golden_tables.py``), at any
+shuffle partition count and Arrow batch size, and a rerun with nothing
+new leaves every table as it was. Equality is exact, as multisets of rows, with no
 tolerance. A pass decodes each file once, and leaves nothing it
 persisted in the session's cache, whether it returns or raises. Each
 stage runs its Spark jobs in the job group ``pipeline:<stage>``; a cold
@@ -24,7 +24,7 @@ from speech_data_pipeline_spark.sources.audio import (
 from tools.golden_tables import table_lines
 
 SEED = 1
-GOLDEN = os.path.join(os.path.dirname(__file__), "golden", f"clips_seed{SEED}")
+GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
 #: Most Spark jobs each stage may launch in a cold pass over the corpus
 #: (52 in all while each stage anti-joined the decoded audio, probed it
 #: with ``isEmpty()`` and ran its shared sub-plans once per branch).
@@ -53,12 +53,15 @@ def decoded(df, id_col, files):
     )
 
 
-@pytest.fixture(scope="module")
-def clips(tmp_path_factory):
+def write_clips(tmp_path_factory, seed):
     from perfbench import corpus
 
-    audio_dir, host_dir, manifest = corpus.write_clips(str(tmp_path_factory.mktemp("clips")), SEED)
-    return audio_dir, host_dir, manifest
+    return corpus.write_clips(str(tmp_path_factory.mktemp(f"clips{seed}")), seed)
+
+
+@pytest.fixture(scope="module")
+def clips(tmp_path_factory):
+    return write_clips(tmp_path_factory, SEED)
 
 
 def inputs(spark, clips, files):
@@ -109,10 +112,10 @@ def tables(workdir):
     return {stage: table_lines(workdir, stage) for stage in STAGE_ORDER}
 
 
-def golden():
+def golden(seed=SEED):
     out = {}
     for stage in STAGE_ORDER:
-        with open(os.path.join(GOLDEN, f"{stage}.jsonl")) as f:
+        with open(os.path.join(GOLDEN_DIR, f"clips_seed{seed}", f"{stage}.jsonl")) as f:
             out[stage] = f.read().splitlines()
     return out
 
@@ -140,13 +143,33 @@ def test_cold_pass_equals_golden_tables(passes):
     assert_tables_equal(passes["cold"], golden())
 
 
-def test_cold_pass_at_one_shuffle_partition_equals_golden_tables(spark, clips, tmp_path):
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
+@pytest.mark.parametrize("seed", [2, 3])
+def test_cold_pass_of_other_seeds_equals_golden_tables(spark, tmp_path_factory, seed):
+    workdir = str(tmp_path_factory.mktemp("stages"))
+    run(spark, write_clips(tmp_path_factory, seed), workdir)
+    assert_tables_equal(tables(workdir), golden(seed))
+
+
+def run_with_conf(spark, clips, workdir, key, value):
+    before = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
-        run(spark, clips, str(tmp_path))
+        run(spark, clips, workdir)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+        spark.conf.set(key, before)
+
+
+def test_cold_pass_at_one_shuffle_partition_equals_golden_tables(spark, clips, tmp_path):
+    run_with_conf(spark, clips, str(tmp_path), "spark.sql.shuffle.partitions", "1")
+    assert_tables_equal(tables(str(tmp_path)), golden())
+
+
+def test_cold_pass_at_arrow_batches_of_three_rows_equals_golden_tables(spark, clips, tmp_path):
+    """Every Python kernel's input is cut into batches of three rows, so
+    the values a kernel reduces sit elsewhere in its Arrow buffers."""
+    run_with_conf(
+        spark, clips, str(tmp_path), "spark.sql.execution.arrow.maxRecordsPerBatch", "3"
+    )
     assert_tables_equal(tables(str(tmp_path)), golden())
 
 
