@@ -2,7 +2,6 @@
 
 All higher-order built-ins — JVM-side, codegen'd, no UDFs:
 
-- ``cut_audio``      — X6: slice a waveform by a [start, end) second range
 - ``trim_or_pad``    — X7: force an array to exactly n elements
 - ``normalize_wave`` — X8: demean + peak-scale to 0.95
 - ``subtract_waves`` — X9: element-wise a - b (mixture - vocal)
@@ -13,14 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def cut_audio(wave: Column, sr: Column, start_sec: Column, end_sec: Column) -> Column:
-    """X6 (reference modules/models/utils.py:187-188): waveform slice by
-    seconds; 1-based slice positions per Spark semantics."""
-    start_idx = F.floor(start_sec * sr).cast("int") + F.lit(1)
-    length = F.floor((end_sec - start_sec) * sr).cast("int")
-    return F.slice(wave, start_idx, F.greatest(length, F.lit(0)))
 
 
 def trim_or_pad(wave: Column, n: int, pad_value: float = 0.0) -> Column:

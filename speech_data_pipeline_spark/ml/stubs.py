@@ -23,6 +23,7 @@ NotImplementedError at the single `load_backend` seam.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -119,7 +120,51 @@ def vad(df: DataFrame, threshold: float = 0.01, min_gap: float = 0.02) -> DataFr
 SEP_SCHEMA = "audio_id string, win_start long, win_end long, v_e double, nv_e double"
 
 
-def separate(df: DataFrame, windows: DataFrame, gate: float = 0.1) -> DataFrame:
+def _per_file(
+    audio: DataFrame,
+    rows: DataFrame,
+    fields: tuple[str, ...],
+    schema: str,
+    fn,
+) -> DataFrame:
+    """One call ``fn(audio_id, samples, sr, rows)`` per file, all in one
+    ``mapInPandas``: the ``fields`` of a file's ``rows`` are collected
+    into one list (of dicts, in no set order) and joined to the file's
+    ``(samples, sr)`` from ``audio`` once, so no row carries a whole
+    waveform. ``samples`` reaches ``fn`` as a float64 array; ``fn``
+    returns the file's output rows as tuples in ``schema``'s column
+    order. A file with no ``rows``, or no ``audio`` row, gets no call.
+    """
+    per_file = rows.groupBy("audio_id").agg(
+        F.collect_list(F.struct(*fields)).alias("_rows")
+    )
+    columns = [c.split()[0] for c in schema.split(",")]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for aid, samples, sr, file_rows in zip(
+                pdf["audio_id"], pdf["samples"], pdf["sr"], pdf["_rows"]
+            ):
+                out.extend(fn(aid, np.asarray(samples, dtype=np.float64), sr, file_rows))
+            yield pd.DataFrame(out, columns=columns)
+
+    return (
+        audio.select("audio_id", "samples", "sr")
+        .join(per_file, "audio_id")
+        .mapInPandas(kernel, schema=schema)
+    )
+
+
+def _segment(x: np.ndarray, sr: int, start: float, end: float) -> np.ndarray:
+    """The samples ``[start*sr, end*sr)`` of ``x``: Spark's
+    ``slice(samples, cast(start * sr as int) + 1, cast((end - start) *
+    sr as int))``."""
+    i = int(start * sr)
+    return x[i:i + int((end - start) * sr)]
+
+
+def separate(audio: DataFrame, windows: DataFrame, gate: float = 0.1) -> DataFrame:
     """Separation stub scored per window (M2 analog, deterministic).
 
     An amplitude gate splits each file's samples: those with
@@ -129,41 +174,26 @@ def separate(df: DataFrame, windows: DataFrame, gate: float = 0.1) -> DataFrame:
     / 1e6 * sr)`` samples from ``int(win_start / 1e6 * sr)`` on: one
     output row ``(audio_id, win_start, win_end, v_e, nv_e)``.
 
-    Input ``df``: ``(audio_id, samples, sr)``. One per-file kernel does
-    the gating and the scoring: a file's windows reach its samples as
-    one array, so no row carries a whole track. Each energy is summed in
-    sample order (``np.cumsum(...)[-1]``), the same left fold as Spark's
-    ``aggregate``, so the sums are bit-identical to it.
+    Input ``audio``: ``(audio_id, samples, sr)``. One per-file kernel
+    (:func:`_per_file`) does the gating and the scoring. Each energy is
+    summed in sample order (``np.cumsum(...)[-1]``), the same left fold
+    as Spark's ``aggregate``, so the sums are bit-identical to it.
     """
-    per_file = windows.groupBy("audio_id").agg(
-        F.collect_list(F.struct("win_start", "win_end")).alias("wins")
-    )
 
     def energy(track: np.ndarray) -> float:
         return float(np.cumsum(track * track)[-1]) if len(track) else 0.0
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(aid, x, sr, wins):
         load_backend("separator")
-        for pdf in batches:
-            rows = []
-            for aid, samples, sr, wins in zip(
-                pdf["audio_id"], pdf["samples"], pdf["sr"], pdf["wins"]
-            ):
-                x = np.asarray(samples, dtype=np.float64)
-                mask = np.abs(x) >= gate
-                voc, nvoc = np.where(mask, x, 0.0), np.where(mask, 0.0, x)
-                for w in wins:
-                    s, e = int(w["win_start"]), int(w["win_end"])
-                    i = int(s / 1e6 * sr)
-                    n = int((e - s) / 1e6 * sr)
-                    rows.append((aid, s, e, energy(voc[i:i + n]), energy(nvoc[i:i + n])))
-            yield pd.DataFrame(rows, columns=["audio_id", "win_start", "win_end", "v_e", "nv_e"])
+        mask = np.abs(x) >= gate
+        voc, nvoc = np.where(mask, x, 0.0), np.where(mask, 0.0, x)
+        for w in wins:
+            s, e = int(w["win_start"]), int(w["win_end"])
+            i = int(s / 1e6 * sr)
+            n = int((e - s) / 1e6 * sr)
+            yield aid, s, e, energy(voc[i:i + n]), energy(nvoc[i:i + n])
 
-    return (
-        df.select("audio_id", "samples", "sr")
-        .join(per_file, "audio_id")
-        .mapInPandas(kernel, schema=SEP_SCHEMA)
-    )
+    return _per_file(audio, windows, ("win_start", "win_end"), SEP_SCHEMA, score)
 
 
 # --------------------------------------------------------------------------
@@ -200,32 +230,32 @@ def diarize(df: DataFrame, turn_sec: float = 1.0, n_speakers: int = 2) -> DataFr
 EMB_DIM = 8
 
 
+def embed_features(x: np.ndarray) -> list[float]:
+    """The stub embedder's vector of one float64 waveform: mean, std,
+    abs-mean, rms, min, max, zero-cross rate and length-log."""
+    if len(x) == 0:
+        return [0.0] * EMB_DIM
+    zc = float(np.mean(np.abs(np.diff(np.sign(x))) > 0)) if len(x) > 1 else 0.0
+    return [
+        float(np.mean(x)),
+        float(np.std(x)),
+        float(np.mean(np.abs(x))),
+        float(np.sqrt(np.mean(x * x))),
+        float(np.min(x)),
+        float(np.max(x)),
+        zc,
+        float(np.log1p(len(x))),
+    ]
+
+
 def embed(df: DataFrame, samples_col: str = "samples") -> DataFrame:
-    """Embedder stub: 8 deterministic moments/features of the waveform
-    (M4 analog: mean, std, abs-mean, rms, min, max, zero-cross rate,
-    length-log). Appends ``embedding array<double>``."""
+    """Embedder stub (M4 analog): appends ``embedding array<double>``,
+    the :func:`embed_features` of each row's waveform."""
 
     @F.pandas_udf("array<double>")
     def _embed(samples: pd.Series) -> pd.Series:
         load_backend("embedder")
-
-        def feats(v):
-            x = np.asarray(v, dtype=np.float64)
-            if len(x) == 0:
-                return [0.0] * EMB_DIM
-            zc = float(np.mean(np.abs(np.diff(np.sign(x))) > 0)) if len(x) > 1 else 0.0
-            return [
-                float(np.mean(x)),
-                float(np.std(x)),
-                float(np.mean(np.abs(x))),
-                float(np.sqrt(np.mean(x * x))),
-                float(np.min(x)),
-                float(np.max(x)),
-                zc,
-                float(np.log1p(len(x))),
-            ]
-
-        return samples.map(feats)
+        return samples.map(lambda v: embed_features(np.asarray(v, dtype=np.float64)))
 
     return df.withColumn("embedding", _embed(F.col(samples_col)))
 
@@ -233,6 +263,37 @@ def embed(df: DataFrame, samples_col: str = "samples") -> DataFrame:
 # --------------------------------------------------------------------------
 # M5: per-file clustering — all chunks of one audio → labels
 # --------------------------------------------------------------------------
+
+
+def cluster_labels(
+    embeddings: list, distance_threshold: float = 0.5, backend: str = "stub"
+) -> list[int]:
+    """Cluster labels of one file's chunk embeddings, in input order.
+
+    Backends:
+
+    - ``stub`` — greedy leader clustering (CI-cheap, order-stable);
+    - ``dbscan`` — REAL pure-NumPy density clustering
+      (ml/clustering.py): DBSCAN at ``eps=distance_threshold`` with the
+      reference's ``max(2, 4% n)`` cluster-size floor and its
+      noise-rescue pass; noise stays ``-1`` exactly as the reference's
+      unmatched label.
+    """
+    be = load_backend("cluster", backend)
+    X = [np.asarray(v, dtype=np.float64) for v in embeddings]
+    if backend == "dbscan":
+        return [int(x) for x in be.cluster_embeddings(np.stack(X), eps=distance_threshold)]
+    leaders: list[np.ndarray] = []
+    labels = []
+    for x in X:
+        for li, l in enumerate(leaders):
+            if np.linalg.norm(x - l) <= distance_threshold:
+                labels.append(li)
+                break
+        else:
+            leaders.append(x)
+            labels.append(len(leaders) - 1)
+    return labels
 
 
 def cluster_per_group(
@@ -245,16 +306,8 @@ def cluster_per_group(
     """Per-file clustering (M5): fit per key inside applyInPandas —
     the per-group-global-fit shape of UMAP+HDBSCAN in the reference
     (modules/speaker_rematch.py:90-137), deterministic (input-order by
-    chunk index, fixed threshold).
-
-    Backends:
-
-    - ``stub`` — greedy leader clustering (CI-cheap, order-stable);
-    - ``dbscan`` — REAL pure-NumPy density clustering
-      (ml/clustering.py): DBSCAN at ``eps=distance_threshold`` with the
-      reference's ``max(2, 4% n)`` cluster-size floor and its
-      noise-rescue pass; noise stays ``-1`` exactly as the reference's
-      unmatched label.
+    chunk index, fixed threshold). Appends ``label int``; see
+    :func:`cluster_labels` for the backends.
     """
     other_cols = [c for c in df.columns if c not in (key, emb_col)]
     in_types = dict(df.dtypes)
@@ -264,30 +317,141 @@ def cluster_per_group(
     schema = ", ".join(schema_parts)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        be = load_backend("cluster", backend)
         sort_cols = [c for c in ("chunk_idx", "start") if c in pdf.columns]
         if sort_cols:
             pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        if backend == "dbscan":
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[emb_col]])
-            labels = be.cluster_embeddings(X, eps=distance_threshold)
-        else:
-            leaders: list[np.ndarray] = []
-            labels = []
-            for v in pdf[emb_col]:
-                x = np.asarray(v, dtype=np.float64)
-                for li, l in enumerate(leaders):
-                    if np.linalg.norm(x - l) <= distance_threshold:
-                        labels.append(li)
-                        break
-                else:
-                    leaders.append(x)
-                    labels.append(len(leaders) - 1)
         out = pdf[[key, *other_cols]].copy()
-        out["label"] = [int(x) for x in labels]
+        out["label"] = cluster_labels(pdf[emb_col], distance_threshold, backend)
         return out
 
     return df.groupBy(key).applyInPandas(kernel, schema=schema)
+
+
+# --------------------------------------------------------------------------
+# Stage-4 per-file kernels: slice → embed → cluster, and slice → embed →
+# per-speaker mean for host verification
+# --------------------------------------------------------------------------
+
+REMATCH_SCHEMA = (
+    "audio_id string, start double, end double, local_speaker string, label int"
+)
+
+
+def rematch_labels(
+    audio: DataFrame,
+    segs: DataFrame,
+    min_chunks: int = 2,
+    distance_threshold: float = 0.5,
+    backend: str = "stub",
+) -> DataFrame:
+    """Speaker rematch chunks (M4 → M5) in one per-file kernel.
+
+    ``segs``: ``(audio_id, start, end, tag)`` single-speaker segments
+    (seconds). Per file, in ``start`` order, each segment's samples are
+    sliced (:func:`_segment`) and embedded (:func:`embed_features`), and
+    the embeddings are clustered (:func:`cluster_labels`). A file with
+    fewer than ``min_chunks`` segments is dropped. Output: one row
+    ``(audio_id, start, end, local_speaker, label)`` per segment.
+    """
+
+    def label(aid, x, sr, rows):
+        if len(rows) < min_chunks:
+            return []
+        load_backend("embedder")
+        rows = sorted(rows, key=lambda r: (r["start"], r["end"], r["tag"]))
+        embs = [embed_features(_segment(x, sr, r["start"], r["end"])) for r in rows]
+        labels = cluster_labels(embs, distance_threshold, backend)
+        return [
+            (aid, r["start"], r["end"], r["tag"], lab) for r, lab in zip(rows, labels)
+        ]
+
+    return _per_file(audio, segs, ("start", "end", "tag"), REMATCH_SCHEMA, label)
+
+
+HOST_SPEAKER_SCHEMA = (
+    "audio_id string, speaker string, emb_b array<double>, "
+    "audio_duration double, shortcut boolean"
+)
+
+
+def host_match_speakers(
+    audio: DataFrame,
+    segs: DataFrame,
+    budget_sec: float = 180.0,
+    early_exit: bool = True,
+) -> DataFrame:
+    """The speakers of each file that host matching verifies, with their
+    mean embedding, in one per-file kernel (reference
+    host_rematch.py:49-96).
+
+    ``segs``: ``(audio_id, speaker, start, end)`` rematched segments.
+    Per file:
+
+    1. each speaker's duration, its segments' ``end - start`` summed in
+       ``start`` order;
+    2. with ``early_exit``, the two rules of
+       :func:`~speech_data_pipeline_spark.plans.stages.host_match_stage`:
+       the two-speaker shortcut emits the shorter speaker as a
+       ``shortcut`` row (``emb_b`` null, ``audio_duration`` its whole
+       duration) and verifies nobody, and a dominant speaker is left out
+       of verification;
+    3. the verified speakers' segments are taken longest first while
+       their running total of whole microseconds stays within
+       ``budget_sec`` (A12, ties by speaker, then start);
+    4. each kept segment is sliced and embedded, and each speaker gets
+       one row with the mean of its embeddings (``emb_b``) and the sum of
+       their durations (``audio_duration``), both accumulated in that
+       longest-first order.
+
+    Every sum starts at 0.0 and adds in the order stated, the order in
+    which Spark's aggregates over the same rows add, so the values are
+    bit-identical to those of the equivalent DataFrame plan.
+    """
+    budget = int(budget_sec * 1e6)
+
+    def speakers(aid, x, sr, rows):
+        rows = sorted(rows, key=lambda r: (r["start"], r["end"], r["speaker"]))
+        spk_dur: dict[str, float] = {}
+        for r in rows:
+            spk_dur[r["speaker"]] = spk_dur.get(r["speaker"], 0.0) + (r["end"] - r["start"])
+        ranked = sorted(spk_dur, key=lambda s: (-spk_dur[s], s))
+        verify = set(ranked)
+        if early_exit:
+            total = 0.0
+            for s in ranked:
+                total += spk_dur[s]
+            top = spk_dur[ranked[0]]
+            rest = total - top
+            if len(ranked) == 2 and top >= 3.0 * rest:
+                return [(aid, ranked[1], None, spk_dur[ranked[1]], True)]
+            if len(ranked) != 2 and top >= 2.0 * rest:
+                verify.discard(ranked[0])
+        todo = sorted(
+            (
+                (math.floor((r["end"] - r["start"]) * 1_000_000.0), r["speaker"], r["start"], r)
+                for r in rows
+                if r["speaker"] in verify
+            ),
+            key=lambda t: (-t[0], t[1], t[2]),
+        )
+        load_backend("embedder")
+        acc: dict[str, tuple[list[float], float, int]] = {}
+        used = 0
+        for dur_us, spk, _, r in todo:
+            used += dur_us
+            if used > budget:
+                continue
+            emb = embed_features(_segment(x, sr, r["start"], r["end"]))
+            sums, dur, n = acc.get(spk, ([0.0] * EMB_DIM, 0.0, 0))
+            acc[spk] = ([a + e for a, e in zip(sums, emb)], dur + (r["end"] - r["start"]), n + 1)
+        return [
+            (aid, spk, [a / n for a in sums], dur, False)
+            for spk, (sums, dur, n) in acc.items()
+        ]
+
+    return _per_file(
+        audio, segs, ("speaker", "start", "end"), HOST_SPEAKER_SCHEMA, speakers
+    )
 
 
 # --------------------------------------------------------------------------
@@ -297,13 +461,16 @@ def cluster_per_group(
 
 def verify_pairs(df: DataFrame, a_col: str = "emb_a", b_col: str = "emb_b") -> DataFrame:
     """Verification stub: cosine similarity of embeddings + boolean
-    prediction at 0.25 (M6 analog over the J5 cross join)."""
+    prediction at 0.25 (M6 analog over the J5 cross join). A pair with
+    a null embedding scores 0.0."""
 
     @F.pandas_udf("double")
     def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
         load_backend("verifier")
 
         def cos(p):
+            if p[0] is None or p[1] is None:
+                return 0.0
             # Fresh copies: on arrays that view the Arrow batch in place,
             # the dot product's rounding depends on their position in it.
             x = np.array(p[0], dtype=float, copy=True)

@@ -3,9 +3,7 @@
 Design (SURVEY.md §1.1 waveform row + known-hard #5): media lives in a
 ``binary`` column with sibling metadata columns; decode/feature steps
 are Arrow-batched ``mapInPandas`` stages so bytes stream executor-side
-in bounded batches and never concentrate on the driver. Long waveforms
-are chunked ``(audio_id, chunk_idx, chunk)`` — the W6 pattern
-(:func:`chunk_waveforms`).
+in bounded batches and never concentrate on the driver.
 
 Audio decode is REAL for every container the repo can verify without
 external codecs: RIFF/WAV (PCM 8-32, IEEE float, G.711 μ-law/A-law,
@@ -15,7 +13,7 @@ with CRC + MD5 verification, operators/flac.py) and Ogg Vorbis
 :func:`decode_audio_bytes`. Any other payload (mp3/m4a/aac) goes to
 the WAV decoder and raises ``NotImplementedError`` naming its
 container; a deterministic fake sits behind ``fake=True``, and the
-Spark-side plumbing — schema, batch iteration, chunking — is real and
+Spark-side plumbing — schema, batch iteration — is real and
 tested either way.
 """
 
@@ -75,162 +73,28 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
-#: Default waveform chunk length in SAMPLES (~32 MB of doubles): far
-#: under the 2 GB Arrow/row ceiling yet big enough that per-chunk
-#: overhead is noise. A 3-hour 44.1 kHz file becomes ~120 rows.
-WAVEFORM_CHUNK_SAMPLES = 4_000_000
-
-
-def chunk_waveforms(
-    audio: DataFrame,
-    chunk_samples: int = WAVEFORM_CHUNK_SAMPLES,
-    samples_col: str = "samples",
-) -> DataFrame:
-    """Full-waveform rows → bounded chunk rows (W6 over samples).
-
-    ``(audio_id, samples, sr)`` → ``(audio_id, sr, chunk_len, chunk_idx,
-    chunk)`` with every ``chunk`` at most ``chunk_samples`` long. This
-    is the mandatory long-file representation (SURVEY.md §7 known-hard
-    #5): a 3-hour waveform in one cell breaks the Arrow 2 GB batch
-    limit, a chunk row never does. Pure column algebra (sequence +
-    explode + slice) — no Python, no shuffle.
-
-    ``chunk_len`` records the chunking stride IN the table so that
-    downstream slicing always uses the right stride — a mismatched
-    constant silently mis-slices, which is why it is data, not an
-    argument.
-    """
-    n_chunks = F.greatest(
-        F.ceil(F.size(samples_col) / F.lit(chunk_samples)).cast("long"),
-        F.lit(1).cast("long"),
-    )
-    return (
-        audio.withColumn("_n", n_chunks)
-        .withColumn(
-            "chunk_idx",
-            F.explode(F.sequence(F.lit(0).cast("long"), F.col("_n") - 1)),
-        )
-        .select(
-            "audio_id",
-            "sr",
-            F.lit(int(chunk_samples)).cast("long").alias("chunk_len"),
-            "chunk_idx",
-            F.expr(
-                f"slice({samples_col}, chunk_idx * {chunk_samples} + 1, "
-                f"{chunk_samples})"
-            ).alias("chunk"),
-        )
-    )
-
-
 def attach_sliced_samples(
     segs: DataFrame,
     audio: DataFrame,
     start: str = "start",
     end: str = "end",
 ) -> DataFrame:
-    """Join segments to audio and attach the per-segment waveform slice.
+    """Join segments to the full-waveform table ``(audio_id, samples,
+    sr)`` and attach each segment's slice ``[start*sr, end*sr)``.
+    Output: all ``segs`` columns + ``sr`` + ``samples`` (the slice).
 
-    Accepts EITHER the full-waveform table ``(audio_id, samples, sr)``
-    OR the chunked table from :func:`chunk_waveforms` (detected by the
-    ``chunk_idx`` column; the chunk stride comes from its ``chunk_len``
-    column, never an argument). Output: all ``segs`` columns + ``sr`` +
-    ``samples`` (the slice ``[start*sr, end*sr)``), identical between
-    the two representations.
-
-    Chunked path (the 100 TB shape): each segment explodes to only the
-    chunk indices it touches (``sequence(floor(s0/L), floor((s1-1)/L))``)
-    then equi-joins on ``(audio_id, chunk_idx)`` — never a range join,
-    never a full-waveform row — slices the intersection inside each
-    chunk, and reassembles ordered via ``array_sort(collect_list)``.
-    A segment's in-flight data is bounded by its own length, not the
-    file's.
-
-    The per-segment regroup key is CONTENT-derived, never
-    ``monotonically_increasing_id`` (whose values depend on partition
-    layout, so a task retry or AQE re-plan could renumber the
-    ``sliced``/``unmatched`` branches inconsistently): ``_h =
-    xxhash64(all segment columns)`` plus ``_rn = row_number`` within
-    the hash (ordered by the same columns). Duplicate segment rows get
-    distinct ``(_h, _rn)`` keys — multiplicity preserved — and the
-    duplicates are interchangeable by construction, so the output
-    multiset is deterministic under any physical layout; a hash
-    collision between *different* segments still yields distinct keys
-    because ``_rn`` is per-row.
+    The join copies a file's whole waveform into each of its segment
+    rows before slicing, so a long file with many segments costs far
+    more than its samples; the pipeline's stages slice inside per-file
+    kernels instead (``ml.stubs``).
     """
-    seg_cols = segs.columns
     slice_expr = (
         f"slice(samples, cast({start} * sr as int) + 1, "
         f"cast(({end} - {start}) * sr as int))"
     )
-    if "chunk_idx" not in audio.columns:
-        return segs.join(audio, "audio_id").select(
-            *seg_cols, "sr", F.expr(slice_expr).alias("samples")
-        )
-
-    elem = audio.schema["chunk"].dataType.simpleString()  # e.g. array<double>
-    sr_tbl = audio.groupBy("audio_id").agg(
-        F.first("sr").alias("sr"), F.first("chunk_len").alias("_L")
+    return segs.join(audio, "audio_id").select(
+        *segs.columns, "sr", F.expr(slice_expr).alias("samples")
     )
-    from pyspark.sql import Window
-
-    key = ["_h", "_rn"]
-    s = (
-        segs.withColumn("_h", F.xxhash64(*[F.col(c) for c in seg_cols]))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("_h").orderBy(*[F.col(c) for c in seg_cols])
-            ),
-        )
-        .join(sr_tbl, "audio_id")
-        .withColumn("_s0", F.expr(f"cast({start} * sr as int)").cast("long"))
-        .withColumn(
-            "_len", F.expr(f"cast(({end} - {start}) * sr as int)").cast("long")
-        )
-        .withColumn("_s1", F.col("_s0") + F.greatest(F.col("_len"), F.lit(0)))
-    )
-    touched = s.where(F.col("_len") > 0).withColumn(
-        "chunk_idx",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("_s0") / F.col("_L")),
-                F.floor((F.col("_s1") - 1) / F.col("_L")),
-            )
-        ),
-    )
-    parts = touched.join(
-        audio.select("audio_id", "chunk_idx", "chunk"), ["audio_id", "chunk_idx"]
-    ).withColumn(
-        "_part",
-        F.expr(
-            "slice(chunk, cast(greatest(_s0 - chunk_idx * _L, 0) as int) + 1, "
-            "cast(least(_s1, (chunk_idx + 1) * _L) "
-            "     - greatest(_s0, chunk_idx * _L) as int))"
-        ),
-    )
-    sliced = parts.groupBy(*key).agg(
-        *[F.first(c).alias(c) for c in seg_cols],
-        F.first("sr").alias("sr"),
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("chunk_idx", "_part"))),
-                lambda p: p["_part"],
-            )
-        ).alias("samples"),
-    )
-    # Segments whose sample range is empty or entirely past the
-    # waveform still get a row (with an empty slice), matching the
-    # full-array path's semantics.
-    unmatched = s.join(
-        sliced.select(*key), key, "left_anti"
-    ).select(
-        *key,
-        *seg_cols,
-        "sr",
-        F.expr(f"cast(array() as {elem})").alias("samples"),
-    )
-    return sliced.unionByName(unmatched).select(*seg_cols, "sr", "samples")
 
 
 def _walk_riff(b: bytes):

@@ -7,10 +7,13 @@ per stage) collapses into one lineage with optional parquet checkpoints
 between stages. The ``audio_id`` partition key flows through every
 stage: the session and sweep kernels, windows and aggregates that need
 a file's rows together shuffle on it. A sub-plan that two branches of a
-stage need is computed once: the separation kernel scores every window
-of a file in one call, diarization projects its sweep once, rematch
-counts chunks on the exchange its clustering uses, and host matching
-reuses its per-speaker table's exchanges in both branches.
+stage need is computed once: diarization projects its sweep once, and
+host matching ranks and picks its shortcut host on one exchange. The
+per-file model work runs in one kernel call per file, which gets the
+file's samples once with all of its rows (``ml.stubs``): separation
+scores every window, rematch slices, embeds and clusters every
+segment, and host matching slices, embeds and averages the segments it
+verifies.
 
 Stage ↔ reference trace map:
   vad_stage          → §3.2 (scan → VAD M1 → pad/clamp F11 → merge W1)
@@ -19,11 +22,13 @@ Stage ↔ reference trace map:
                        projections
   diarization_stage  → §3.3 (vocal combine F1/F2/U1/W9/W1 →
                        diarize M3 → sweep W3 → overlap flag F5)
-  rematch_stage      → speaker_rematch.py: chunk F3/F4 → embed M4 →
-                       per-file cluster M5 → relabel X3 → merge W2 →
-                       mapping join J6, guards F9/F10
-  host_match_stage   → host_rematch.py: A1 durations → A12 budget →
-                       J5 cross-join verify M6 → F6 accept → W11 rank
+  rematch_stage      → speaker_rematch.py: per-file kernel (chunk
+                       F3/F4 → slice → embed M4 → cluster M5) →
+                       relabel X3 → merge W2 → mapping J6, guards F9/F10
+  host_match_stage   → host_rematch.py: per-file kernel (A1 durations
+                       → early exits → A12 budget → slice → embed M4 →
+                       per-speaker mean) → J5 cross-join verify M6 →
+                       F6 accept → W11 rank
 """
 
 from __future__ import annotations
@@ -33,14 +38,16 @@ from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.ml import stubs
 from speech_data_pipeline_spark.operators.intervals import clamp
-from speech_data_pipeline_spark.operators.multimodal import attach_sliced_samples
+# No stage calls ``attach_sliced_samples`` or ``budgeted_topk`` any more;
+# both stay imported because perfbench/trace.py patches them here by name.
+from speech_data_pipeline_spark.operators.multimodal import attach_sliced_samples  # noqa: F401
 from speech_data_pipeline_spark.operators.sessions import (
     sessionize_capped,
     sessionize_gap,
 )
 from speech_data_pipeline_spark.operators.sweepline import flatten_active_sets
 from speech_data_pipeline_spark.operators.windows import (
-    budgeted_topk,
+    budgeted_topk,  # noqa: F401
     sliding_windows,
 )
 
@@ -173,10 +180,13 @@ def rematch_stage(
 ) -> tuple[DataFrame, DataFrame]:
     """Single-speaker segments → globally relabeled segments + mapping.
 
-    ``audio`` may be the full-waveform table or the chunked one from
-    :func:`~speech_data_pipeline_spark.operators.multimodal.chunk_waveforms`
-    — long files MUST use the chunked form at scale (SURVEY.md §7
-    known-hard #5); ``attach_sliced_samples`` handles both identically.
+    ``audio``: ``(audio_id, samples, sr)``. The segments longer than
+    ``min_duration`` are sliced, embedded and clustered in one kernel
+    call per file (:func:`~speech_data_pipeline_spark.ml.stubs.rematch_labels`),
+    which gets the file's samples once, so no row carries a whole
+    waveform; a file with fewer than ``min_chunks`` of them is dropped.
+    The relabel, the ``mapping`` and the capped speaker merge run in
+    Spark on the labelled segments.
 
     ``min_merged_duration`` is the reference's trailing W2 filter
     (speaker_rematch.py:43: drop merged segments with
@@ -185,23 +195,9 @@ def rematch_stage(
     host matching.
     """
     segs = single.where(F.col("end") - F.col("start") > min_duration)
-    sliced = attach_sliced_samples(segs, audio).select(
-        "audio_id",
-        "start",
-        "end",
-        F.col("tag").alias("local_speaker"),
-        "samples",
+    labeled = stubs.rematch_labels(
+        audio, segs, min_chunks=min_chunks, backend=cluster_backend
     )
-    # files with enough chunks: a count over the file, whose exchange on
-    # ``audio_id`` the per-file clustering reuses
-    n_chunks = F.count(F.lit(1)).over(Window.partitionBy("audio_id"))
-    emb = (
-        stubs.embed(sliced).drop("samples")
-        .withColumn("n_chunks", n_chunks)
-        .where(F.col("n_chunks") >= min_chunks)
-        .drop("n_chunks")
-    )
-    labeled = stubs.cluster_per_group(emb, key="audio_id", backend=cluster_backend)
     # noise chunks (-1, from the dbscan backend) map to the reference's
     # "unknown" label (speaker_rematch.py:144), not a speaker id
     relabeled = labeled.withColumn(
@@ -257,95 +253,35 @@ def host_match_stage(
       this verifies nobody, as in the reference);
     * else verify every speaker.
 
-    At scale this is the knob that keeps the expensive slice→embed→
-    verify path off the hosts-dominated bulk of the corpus; the
-    heuristics themselves are one window over the per-speaker duration
-    table (one shuffle on ``audio_id``, no model calls), computed once
-    for both branches.
+    The verified speakers' segments are then budgeted longest first to
+    ``budget_sec``, sliced, embedded and averaged per speaker. All of
+    that, the durations and both rules included, is one kernel call per
+    file (:func:`~speech_data_pipeline_spark.ml.stubs.host_match_speakers`),
+    which gets the file's samples once. Spark then cross-joins its
+    speakers with the broadcast host embeddings, runs the verifier, and
+    ranks each ``(audio_id, host_id)``'s accepted speakers by score.
     """
-    # A row without a key belongs to no file. Dropping it here, and not
-    # only where the semi-join below infers that filter on its stats
-    # side, gives both branches the same stats sub-plan, so Spark runs
-    # its two shuffles once and reuses them in the other branch.
-    durs = rematched.where(F.col("audio_id").isNotNull()).withColumn(
-        "dur", F.col("end") - F.col("start")
-    )
-    shortcut_matches = None
-    if early_exit:
-        w_all = Window.partitionBy("audio_id")
-        w_rank = Window.partitionBy("audio_id").orderBy(
-            F.col("spk_dur").desc(), F.col("speaker")
-        )
-        stats = (
-            durs.groupBy("audio_id", "speaker")
-            .agg(F.sum("dur").alias("spk_dur"))
-            .withColumn("n_speakers", F.count(F.lit(1)).over(w_all))
-            .withColumn("total_dur", F.sum("spk_dur").over(w_all))
-            .withColumn("top_dur", F.max("spk_dur").over(w_all))
-            .withColumn("rnk", F.row_number().over(w_rank))
-        )
-        rest = F.col("total_dur") - F.col("top_dur")
-        two_shortcut = (F.col("n_speakers") == 2) & (F.col("top_dur") >= 3.0 * rest)
-        dominant_skip = (F.col("n_speakers") != 2) & (F.col("top_dur") >= 2.0 * rest)
-        stats = stats.withColumn(
-            "verify",
-            F.when(two_shortcut, F.lit(False))
-            .when(dominant_skip, F.col("rnk") > 1)
-            .otherwise(F.lit(True)),
-        )
-        first_host = hosts.select(F.min("host_id").alias("host_id")).where(
-            F.col("host_id").isNotNull()
-        )
-        shortcut_matches = (
-            stats.where(two_shortcut & (F.col("rnk") == 2))
-            .crossJoin(F.broadcast(first_host))
-            .select(
-                "audio_id",
-                "host_id",
-                "speaker",
-                F.lit(1.0).alias("score"),
-                F.col("spk_dur").alias("audio_duration"),
-                F.lit(1).alias("rank"),
-            )
-        )
-        durs = durs.join(
-            stats.where(F.col("verify")).select("audio_id", "speaker"),
-            ["audio_id", "speaker"],
-            "left_semi",
-        )
-    budgeted = budgeted_topk(
-        durs.withColumn("dur_us", _us(F.col("dur"))),
-        budget=int(budget_sec * 1e6),
-        key="audio_id",
-        weight_col="dur_us",
-        order_cols=("speaker", "start"),
-    )
-    sliced = attach_sliced_samples(budgeted, audio).select(
-        "audio_id", "speaker", "samples", "dur"
-    )
-    spk_emb = (
-        stubs.embed(sliced)
-        .groupBy("audio_id", "speaker")
-        .agg(
-            F.array(*[F.avg(F.col("embedding")[i]) for i in range(stubs.EMB_DIM)]).alias(
-                "emb_b"
-            ),
-            F.sum("dur").alias("audio_duration"),
-        )
+    speakers = stubs.host_match_speakers(
+        audio, rematched, budget_sec=budget_sec, early_exit=early_exit
     )
     host_emb = stubs.embed(hosts, samples_col="samples").select(
         F.col("host_id"), F.col("embedding").alias("emb_a")
     )
-    scored = stubs.verify_pairs(spk_emb.crossJoin(F.broadcast(host_emb)))
-    accepted = scored.where(F.col("prediction") & (F.col("score") > 0.5))
+    scored = stubs.verify_pairs(speakers.crossJoin(F.broadcast(host_emb)))
+    # One exchange on ``audio_id`` serves both windows. A shortcut file
+    # verifies no speaker: its rows are its shorter speaker against every
+    # host, and it keeps the first host's row, which ranks 1 alone.
+    first_host = F.min("host_id").over(Window.partitionBy("audio_id"))
     w = Window.partitionBy("audio_id", "host_id").orderBy(
         F.col("score").desc(), F.col("speaker")
     )
-    verified = accepted.withColumn("rank", F.row_number().over(w)).select(
-        "audio_id", "host_id", "speaker", "score", "audio_duration", "rank"
+    return (
+        scored.withColumn("first_host", first_host)
+        .where(
+            F.when(F.col("shortcut"), F.col("host_id") == F.col("first_host"))
+            .otherwise(F.col("prediction") & (F.col("score") > 0.5))
+        )
+        .withColumn("score", F.when(F.col("shortcut"), F.lit(1.0)).otherwise(F.col("score")))
+        .withColumn("rank", F.row_number().over(w))
+        .select("audio_id", "host_id", "speaker", "score", "audio_duration", "rank")
     )
-    if shortcut_matches is not None:
-        # shortcut files verify no speakers, so the union introduces no
-        # duplicate (audio_id, host_id) groups and rank=1 stands alone
-        verified = verified.unionByName(shortcut_matches)
-    return verified

@@ -5,7 +5,6 @@ import math
 from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.functions.arrays import (
-    cut_audio,
     mono_mixdown,
     normalize_wave,
     subtract_waves,
@@ -18,12 +17,6 @@ def one(spark, col):
         [([0.0, 1.0, 2.0, 3.0, 4.0, 5.0], [1.0, 3.0], 2)], ["w", "w2", "sr"]
     )
     return df.select(col.alias("out")).first().out
-
-
-def test_cut_audio(spark):
-    out = one(spark, cut_audio(F.col("w"), F.col("sr"), F.lit(1.0), F.lit(2.5)))
-    # sr=2: start idx 2 (0-based) -> slice pos 3, length 3
-    assert out == [2.0, 3.0, 4.0]
 
 
 def test_trim_or_pad(spark):

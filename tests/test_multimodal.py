@@ -1,4 +1,4 @@
-"""WAV decode seam + waveform chunking (SURVEY.md §2.1 S2-S5 decode).
+"""WAV decode seam (SURVEY.md §2.1 S2-S5 decode).
 
 The real decoder covers uncompressed RIFF/WAV (PCM 8/16/24/32-bit and
 IEEE float) with pure NumPy — the one media format the engine can decode
@@ -15,8 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.operators.multimodal import (
-    attach_sliced_samples,
-    chunk_waveforms,
     decode_media,
     decode_wav_bytes,
 )
@@ -175,58 +173,6 @@ def test_decode_media_through_vad_stage(spark):
     assert "1" in ids and "2" not in ids
     for r in vad:
         assert r.end > r.start >= 0
-
-
-def test_chunked_waveform_slice_edges(spark):
-    """Slices crossing chunk boundaries, at array edges, and past the
-    end match the full-array slice exactly."""
-    samples = [float(i) for i in range(100)]
-    audio = spark.createDataFrame([("f", samples, 10)], "audio_id string, samples array<double>, sr int")
-    segs = spark.createDataFrame(
-        [("f", 0.0, 1.0), ("f", 0.95, 3.55), ("f", 9.0, 12.0), ("f", 4.0, 4.0)],
-        "audio_id string, start double, end double",
-    )
-    full = attach_sliced_samples(segs, audio)
-    chk = attach_sliced_samples(segs, chunk_waveforms(audio, chunk_samples=13))
-    key = lambda r: (r.audio_id, r.start, r.end)  # noqa: E731
-    f = {key(r): list(r.samples) for r in full.collect()}
-    c = {key(r): list(r.samples) for r in chk.collect()}
-    assert f == c and len(f) == 4
-
-
-def test_chunked_slice_deterministic_under_layout(spark):
-    """The chunked path's regroup key is content-derived, so the result
-    multiset must be identical under shuffle-partition perturbation and
-    input repartitioning (a task retry / AQE re-plan is exactly a
-    layout change) — including DUPLICATE segment rows, which must keep
-    their multiplicity, not collapse."""
-    samples = [float(i) for i in range(100)]
-    audio = spark.createDataFrame(
-        [("f", samples, 10)], "audio_id string, samples array<double>, sr int"
-    )
-    segs = spark.createDataFrame(
-        [("f", 0.0, 1.0), ("f", 0.0, 1.0), ("f", 2.5, 6.05), ("f", 20.0, 21.0)],
-        "audio_id string, start double, end double",
-    )
-    want = sorted(
-        (r.audio_id, r.start, r.end, tuple(r.samples))
-        for r in attach_sliced_samples(segs, audio).collect()
-    )
-    assert len(want) == 4 and want[0] == want[1]  # duplicate preserved
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for n_shuffle, n_part in ((1, 1), (7, 5), (32, 3)):
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
-            got = sorted(
-                (r.audio_id, r.start, r.end, tuple(r.samples))
-                for r in attach_sliced_samples(
-                    segs.repartition(n_part),
-                    chunk_waveforms(audio, chunk_samples=13),
-                ).collect()
-            )
-            assert got == want, (n_shuffle, n_part)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_decode_wav_stereo_channels_preserved():
@@ -531,3 +477,29 @@ def test_decode_media_handles_g711(spark):
     )
     row = decode_media(df).collect()[0]
     assert row.sr == 8000 and len(row.samples) == 200
+
+
+def test_segment_slice_matches_spark_slice_at_edges(spark):
+    """The per-file kernels' slice (``stubs._segment``) takes the same
+    samples as ``attach_sliced_samples``' Spark ``slice``: inside the
+    waveform, across its end, past it and at zero length."""
+    import numpy as np
+
+    from speech_data_pipeline_spark.ml.stubs import _segment
+    from speech_data_pipeline_spark.operators.multimodal import attach_sliced_samples
+
+    samples = [float(i) for i in range(100)]
+    audio = spark.createDataFrame(
+        [("f", samples, 10)], "audio_id string, samples array<double>, sr int"
+    )
+    segs = spark.createDataFrame(
+        [("f", 0.0, 1.0), ("f", 0.95, 3.55), ("f", 9.0, 12.0), ("f", 20.0, 21.0), ("f", 4.0, 4.0)],
+        "audio_id string, start double, end double",
+    )
+    got = {
+        (r.start, r.end): list(r.samples) for r in attach_sliced_samples(segs, audio).collect()
+    }
+    x = np.asarray(samples)
+    assert len(got) == 5
+    for (s, e), want in got.items():
+        assert list(_segment(x, 10, s, e)) == want, (s, e)

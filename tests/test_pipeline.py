@@ -119,25 +119,6 @@ def test_host_match_schema_and_acceptance(stages):
         assert r.score > 0.5  # F6 acceptance predicate enforced
 
 
-def test_chunked_slicing_matches_full(spark, stages):
-    """attach_sliced_samples over chunk_waveforms == full-array slicing,
-    with a tiny chunk size forcing multi-chunk reassembly (SURVEY.md §7
-    known-hard #5: long files must flow chunked)."""
-    from speech_data_pipeline_spark.operators.multimodal import (
-        attach_sliced_samples,
-        chunk_waveforms,
-    )
-
-    audio = stages["audio"]
-    segs = stages["single"].select("audio_id", "start", "end", "tag")
-    full = attach_sliced_samples(segs, audio)
-    chunked = attach_sliced_samples(segs, chunk_waveforms(audio, chunk_samples=37))
-    key = lambda r: (r.audio_id, r.start, r.end, r.tag)  # noqa: E731
-    f = {key(r): (r.sr, list(r.samples)) for r in full.collect()}
-    c = {key(r): (r.sr, list(r.samples)) for r in chunked.collect()}
-    assert f and f == c
-
-
 def test_rematch_min_merged_duration_filter(spark, stages):
     """W2 trailing filter (speaker_rematch.py:43): merged segments with
     span <= min_merged_duration are dropped; 0.0 keeps everything."""
@@ -150,25 +131,6 @@ def test_rematch_min_merged_duration_filter(spark, stages):
     assert all(r.end - r.start > 1.5 for r in f_rows)
     key = lambda r: (r.audio_id, r.speaker, r.start, r.end)  # noqa: E731
     assert {key(r) for r in f_rows} <= {key(r) for r in kept_rows}
-
-
-def test_rematch_stage_chunked_corpus_matches(spark, stages):
-    """rematch_stage over the chunked corpus returns the same tables as
-    over full-waveform rows."""
-    from speech_data_pipeline_spark.operators.multimodal import chunk_waveforms
-
-    audio, single = stages["audio"], stages["single"]
-    r_full, m_full = rematch_stage(audio, single, min_merged_duration=0.0)
-    r_chunk, m_chunk = rematch_stage(
-        chunk_waveforms(audio, chunk_samples=53), single, min_merged_duration=0.0
-    )
-    assert r_full.count() > 0
-    as_set = lambda df: {  # noqa: E731
-        tuple(round(v, 9) if isinstance(v, float) else v for v in row)
-        for row in df.collect()
-    }
-    assert as_set(r_full) == as_set(r_chunk)
-    assert as_set(m_full) == as_set(m_chunk)
 
 
 def test_detect_language_seeded_window(spark):
