@@ -27,11 +27,17 @@ set belongs in a per-file ledger table that a semi-join reads.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+#: The footer key under which Spark stores a parquet file's Spark schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def listed_keys(inputs: DataFrame) -> list[str]:
@@ -52,6 +58,21 @@ def pending_keys(spark: SparkSession, keys: Iterable[str], out_path: str) -> lis
             for r in table.where(F.col("status") == "ok").select("audio_id").collect()
         }
     return [k for k in keys if k not in done]
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet table Spark wrote at ``path``, with the Spark schema
+    read from one part file's footer, so no Spark job infers it. A table
+    without that footer key is read with inference."""
+    parts = sorted(glob.glob(os.path.join(path, "part-*")))
+    if parts:
+        import pyarrow.parquet as pq
+
+        meta = pq.read_schema(parts[0]).metadata or {}
+        if _SPARK_SCHEMA_KEY in meta:
+            schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+            return spark.read.schema(schema).parquet(path)
+    return spark.read.parquet(path)
 
 
 def pending(inputs: DataFrame, keys: Iterable[str]) -> DataFrame:
@@ -92,7 +113,7 @@ def run_incremental_stage(
         keys = pending_keys(spark, listed_keys(inputs), out_path)
     if not keys:
         if os.path.exists(out_path):
-            return spark.read.parquet(out_path)
+            return read_table(spark, out_path)
         return spark.createDataFrame([], "audio_id string")
     out = stage_fn(pending(inputs, keys))
     if "status" not in out.columns:

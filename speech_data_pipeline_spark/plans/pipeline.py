@@ -28,6 +28,7 @@ from speech_data_pipeline_spark.plans import stages as st
 from speech_data_pipeline_spark.plans.incremental import (
     listed_keys,
     pending_keys,
+    read_table,
     run_incremental_stage,
 )
 
@@ -102,8 +103,8 @@ def run_pipeline(
     ``ok`` row in its table, read with no job while the table does not
     exist) and gets ``audio`` and its upstream's rows filtered to those
     keys: no anti-join, no emptiness probe and no key exchange. A stage
-    with nothing pending only reads its table: the keys, and the schema
-    of the table it returns.
+    with nothing pending only reads the keys of its table, in one job;
+    the table it returns takes its schema from a part file's footer.
 
     ``audio`` and ``hosts`` are persisted for the length of the call
     (unless the caller already cached them) and released when it ends,
@@ -160,4 +161,4 @@ def _load(spark: SparkSession, path: str) -> DataFrame:
         raise FileNotFoundError(
             f"stage table {path} missing - run its upstream stage first"
         )
-    return spark.read.parquet(path)
+    return read_table(spark, path)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from speech_data_pipeline_spark.plans.incremental import (
     pending,
     pending_keys,
+    read_table,
     run_incremental_stage,
     stage_counters,
 )
@@ -22,6 +23,30 @@ def test_pending_keys_skip_done_and_retry_failed(spark, tmp_path):
     assert pending_keys(spark, ["c", "a"], str(tmp_path / "absent")) == ["c", "a"]
     inputs = spark.createDataFrame([("a",), ("b",), ("c",)], ["audio_id"])
     assert sorted(r.audio_id for r in pending(inputs, ["b", "c"]).collect()) == ["b", "c"]
+
+
+def test_read_table_takes_the_schema_from_a_footer(spark, tmp_path):
+    """The schema ``read_table`` reads from a part file's footer equals
+    the one Spark infers, nullability and nesting included, and reading
+    it runs no Spark job."""
+    table = str(tmp_path / "stage")
+    df = spark.createDataFrame(
+        [("a", 1.5, [0.25, 1.0], True), ("b", None, None, False)],
+        "audio_id string not null, score double, emb array<double>, ok boolean",
+    )
+    df.write.parquet(table)
+    df.write.mode("append").parquet(table)
+    sc = spark.sparkContext
+    sc.setJobGroup("read_table", "test")
+    try:
+        got = read_table(spark, table)
+        jobs = sc.statusTracker().getJobIdsForGroup("read_table")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert got.schema == spark.read.parquet(table).schema
+    assert sorted(got.collect()) == sorted(df.collect() * 2)
 
 
 def test_run_incremental_stage_idempotent(spark):

@@ -7,7 +7,7 @@ tolerance. A pass decodes each file once, and leaves nothing it
 persisted in the session's cache, whether it returns or raises. Each
 stage runs its Spark jobs in the job group ``pipeline:<stage>``; a cold
 pass stays under a per-stage job ceiling, and a rerun with nothing new
-only reads each stage table: its ok keys and its schema.
+only reads each stage table's ok keys.
 """
 
 import os
@@ -27,11 +27,13 @@ SEED = 1
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
 #: Most Spark jobs each stage may launch in a cold pass over the corpus
 #: (52 in all while each stage anti-joined the decoded audio, probed it
-#: with ``isEmpty()`` and ran its shared sub-plans once per branch).
-COLD_JOB_CEILINGS = {"vad": 3, "separation": 4, "diarization": 3, "rematch": 4, "host_match": 13}
-#: A stage with nothing pending reads its table twice: the keys of its
-#: ``ok`` rows, and the schema of the table it returns.
-NOOP_JOBS_PER_STAGE = 2
+#: with ``isEmpty()`` and ran its shared sub-plans once per branch; 28
+#: while rematch and host matching joined each segment to its file's
+#: whole waveform, and host matching ran its rules as Spark windows).
+COLD_JOB_CEILINGS = {"vad": 3, "separation": 4, "diarization": 3, "rematch": 4, "host_match": 6}
+#: A stage with nothing pending reads the keys of its ``ok`` rows, in
+#: one job; the table it returns reads its schema from a parquet footer.
+NOOP_JOBS_PER_STAGE = 1
 CALLER_GROUP = "caller"
 
 
