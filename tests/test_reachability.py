@@ -66,9 +66,8 @@ KEEP = {
     "sources.wavmeta._meta_tuple",
     "sources.wavmeta.WavMetaStreamReader",
     "sources.wavmeta.register_wavmeta",
-    # Adopt or delete in item 2 (per-file slicing of long waveforms).
-    "operators.multimodal.chunk_waveforms",
-    "functions.arrays.cut_audio",
+    # Adopt or delete in item 5, once the episodes workload shows
+    # whether scheduling long files first earns its keep.
     "sources.audio.longest_first_hint",
     # Adopt in item 5 (the per-stage run report).
     "plans.incremental.stage_counters",
