@@ -14,8 +14,21 @@ Every reference model stage becomes an Arrow-batched pandas kernel
   modules/vad_multi.py:50, which this design fixes for free).
 
 Cardinalities mirror SURVEY §2.10: M1/M3/M7 are 1→N (mapInPandas),
-M2/M4/M6/M8/M10 are 1→1 (scalar kernels), M5 is per-group
+M4/M6/M8/M10 are 1→1 (scalar kernels), M5 is per-group
 (applyInPandas — the fit is global per audio file).
+
+The pipeline's per-file model work runs as per-file kernels
+(:func:`_per_file`): one ``mapInPandas`` call per file gets the file's
+samples once, with all of its rows, so no row carries a whole
+waveform. Separation (M2, :func:`separate`) scores a file's windows;
+speaker rematch (:func:`rematch_labels`) slices, embeds (M4) and
+clusters (M5) its segments; host matching
+(:func:`host_match_speakers`) applies its early exits and budget, then
+slices, embeds and averages the segments it verifies. The embedder
+features (:func:`embed_features`) and the cluster labelling
+(:func:`cluster_labels`) are plain NumPy functions that these kernels
+and the DataFrame stubs :func:`embed` and :func:`cluster_per_group`
+share.
 
 No real model libraries exist in this container; real backends raise
 NotImplementedError at the single `load_backend` seam.
@@ -409,10 +422,13 @@ def host_match_speakers(
     """
     budget = int(budget_sec * 1e6)
 
+    def dur_us(r) -> int:
+        return math.floor((r["end"] - r["start"]) * 1_000_000.0)
+
     def speakers(aid, x, sr, rows):
-        rows = sorted(rows, key=lambda r: (r["start"], r["end"], r["speaker"]))
+        # Explicit left folds: sum() compensates float error on Python 3.12+.
         spk_dur: dict[str, float] = {}
-        for r in rows:
+        for r in sorted(rows, key=lambda r: (r["start"], r["end"], r["speaker"])):
             spk_dur[r["speaker"]] = spk_dur.get(r["speaker"], 0.0) + (r["end"] - r["start"])
         ranked = sorted(spk_dur, key=lambda s: (-spk_dur[s], s))
         verify = set(ranked)
@@ -421,29 +437,26 @@ def host_match_speakers(
             for s in ranked:
                 total += spk_dur[s]
             top = spk_dur[ranked[0]]
-            rest = total - top
-            if len(ranked) == 2 and top >= 3.0 * rest:
+            if len(ranked) == 2 and top >= 3.0 * (total - top):
                 return [(aid, ranked[1], None, spk_dur[ranked[1]], True)]
-            if len(ranked) != 2 and top >= 2.0 * rest:
+            if len(ranked) != 2 and top >= 2.0 * (total - top):
                 verify.discard(ranked[0])
-        todo = sorted(
-            (
-                (math.floor((r["end"] - r["start"]) * 1_000_000.0), r["speaker"], r["start"], r)
-                for r in rows
-                if r["speaker"] in verify
-            ),
-            key=lambda t: (-t[0], t[1], t[2]),
+        candidates = sorted(
+            (r for r in rows if r["speaker"] in verify),
+            key=lambda r: (-dur_us(r), r["speaker"], r["start"]),
         )
         load_backend("embedder")
         acc: dict[str, tuple[list[float], float, int]] = {}
         used = 0
-        for dur_us, spk, _, r in todo:
-            used += dur_us
+        for r in candidates:
+            used += dur_us(r)
             if used > budget:
                 continue
             emb = embed_features(_segment(x, sr, r["start"], r["end"]))
-            sums, dur, n = acc.get(spk, ([0.0] * EMB_DIM, 0.0, 0))
-            acc[spk] = ([a + e for a, e in zip(sums, emb)], dur + (r["end"] - r["start"]), n + 1)
+            sums, dur, n = acc.get(r["speaker"], ([0.0] * EMB_DIM, 0.0, 0))
+            acc[r["speaker"]] = (
+                [a + e for a, e in zip(sums, emb)], dur + (r["end"] - r["start"]), n + 1
+            )
         return [
             (aid, spk, [a / n for a in sums], dur, False)
             for spk, (sums, dur, n) in acc.items()

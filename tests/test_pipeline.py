@@ -6,6 +6,7 @@ reference's shapes and invariants.
 
 import numpy as np
 import pytest
+from conftest import rows
 from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.plans.stages import (
@@ -108,6 +109,22 @@ def test_rematch_mapping_and_merge(stages):
     assert rem
     for r in rem:
         assert r.end - r.start <= 20.0 + 1e-9  # W2 span cap
+
+
+@pytest.mark.parametrize("backend", ["stub", "dbscan"])
+def test_rematch_kernel_labels_like_the_dataframe_chain(stages, backend):
+    """The per-file rematch kernel labels every segment as the DataFrame
+    chain attach_sliced_samples -> embed -> cluster_per_group does."""
+    from speech_data_pipeline_spark.ml import stubs
+    from speech_data_pipeline_spark.operators.multimodal import attach_sliced_samples
+
+    audio = stages["audio"]
+    segs = stages["single"].select("audio_id", "start", "end", "tag")
+    got = rows(stubs.rematch_labels(audio, segs, min_chunks=1, backend=backend))
+    sliced = attach_sliced_samples(segs, audio).withColumnRenamed("tag", "local_speaker")
+    chain = stubs.cluster_per_group(stubs.embed(sliced).drop("samples", "sr"), backend=backend)
+    want = rows(chain, "audio_id", "start", "end", "local_speaker", "label")
+    assert len(got) > 2 and got == want
 
 
 def test_host_match_schema_and_acceptance(stages):
