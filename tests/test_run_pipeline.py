@@ -2,8 +2,8 @@
 (seeds 1-3): a cold pass writes exactly the golden stage tables under
 ``tests/golden/clips_seed<seed>/`` (``tools/golden_tables.py``), at any
 shuffle partition count and Arrow batch size, and a rerun with nothing
-new leaves every table as it was. Equality is exact, as multisets of rows, with no
-tolerance. A pass decodes each file once, and leaves nothing it
+new leaves every table as it was. Equality is exact, as multisets of
+rows, with no tolerance. A pass decodes each file once, and leaves nothing it
 persisted in the session's cache, whether it returns or raises. Each
 stage runs its Spark jobs in the job group ``pipeline:<stage>``; a cold
 pass stays under a per-stage job ceiling, and a rerun with nothing new
