@@ -354,7 +354,6 @@ def rematch_labels(
     audio: DataFrame,
     segs: DataFrame,
     min_chunks: int = 2,
-    distance_threshold: float = 0.5,
     backend: str = "stub",
 ) -> DataFrame:
     """Speaker rematch chunks (M4 → M5) in one per-file kernel.
@@ -373,7 +372,7 @@ def rematch_labels(
         load_backend("embedder")
         rows = sorted(rows, key=lambda r: (r["start"], r["end"], r["tag"]))
         embs = [embed_features(_segment(x, sr, r["start"], r["end"])) for r in rows]
-        labels = cluster_labels(embs, distance_threshold, backend)
+        labels = cluster_labels(embs, backend=backend)
         return [
             (aid, r["start"], r["end"], r["tag"], lab) for r, lab in zip(rows, labels)
         ]
@@ -416,9 +415,11 @@ def host_match_speakers(
        their durations (``audio_duration``), both accumulated in that
        longest-first order.
 
-    Every sum starts at 0.0 and adds in the order stated, the order in
-    which Spark's aggregates over the same rows add, so the values are
-    bit-identical to those of the equivalent DataFrame plan.
+    Every sum starts at 0.0 and adds in the order stated. Spark leaves
+    the order of an aggregate's inputs to the physical plan; this is the
+    order in which the stage's former DataFrame plan fed its aggregates
+    (the budget window's, for the means), so the stage tables are
+    bit-identical to that plan's.
     """
     budget = int(budget_sec * 1e6)
 

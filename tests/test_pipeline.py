@@ -127,6 +127,119 @@ def test_rematch_kernel_labels_like_the_dataframe_chain(stages, backend):
     assert len(got) > 2 and got == want
 
 
+# (audio_id, speaker, start, end): a file whose dominant speaker is left
+# out, a two-speaker shortcut file, a balanced two-speaker file and a
+# one-speaker file. Lengths such as 1.3 s and 1.7 s differ in their
+# floored microseconds; the 1.5 s ones tie exactly, so the budget's
+# floors, its ties and the order of each mean's sum all count.
+HOST_SEGS = [
+    ("three", "A", 0.1, 4.4), ("three", "A", 5.0, 9.7), ("three", "A", 10.3, 13.1),
+    ("three", "B", 13.4, 14.7), ("three", "B", 15.0, 16.3),
+    ("three", "C", 16.9, 18.2), ("three", "C", 18.5, 19.6),
+    ("short", "A", 0.0, 6.1), ("short", "A", 7.0, 12.3),
+    ("short", "B", 12.5, 13.7), ("short", "B", 14.0, 15.1),
+    ("two", "A", 0.25, 1.75), ("two", "A", 2.0, 3.5), ("two", "B", 3.75, 5.25),
+    ("two", "B", 5.6, 6.9), ("two", "A", 8.0, 9.5), ("two", "B", 10.0, 10.8),
+    ("solo", "A", 1.0, 2.5), ("solo", "A", 3.0, 6.5),
+]
+BUDGET_SEC = 4.8
+
+
+def host_speakers_chain(audio, segs, budget_sec, early_exit):
+    """host_match_stage's speaker table as a DataFrame chain: window
+    statistics for the early exits, budgeted_topk, attach_sliced_samples,
+    embed, and a per-speaker avg and sum."""
+    from pyspark.sql import Window
+
+    from speech_data_pipeline_spark.ml import stubs
+    from speech_data_pipeline_spark.operators.multimodal import attach_sliced_samples
+    from speech_data_pipeline_spark.operators.windows import budgeted_topk
+
+    durs = segs.withColumn("dur", F.col("end") - F.col("start"))
+    out = []
+    if early_exit:
+        w_all = Window.partitionBy("audio_id")
+        w_rank = Window.partitionBy("audio_id").orderBy(F.col("spk_dur").desc(), "speaker")
+        stats = (
+            durs.groupBy("audio_id", "speaker")
+            .agg(F.sum("dur").alias("spk_dur"))
+            .withColumn("n", F.count(F.lit(1)).over(w_all))
+            .withColumn("total", F.sum("spk_dur").over(w_all))
+            .withColumn("top", F.max("spk_dur").over(w_all))
+            .withColumn("rnk", F.row_number().over(w_rank))
+        )
+        rest = F.col("total") - F.col("top")
+        shortcut = (F.col("n") == 2) & (F.col("top") >= 3.0 * rest)
+        dominant = (F.col("n") != 2) & (F.col("top") >= 2.0 * rest)
+        stats = stats.withColumn(
+            "verify",
+            F.when(shortcut, False).when(dominant, F.col("rnk") > 1).otherwise(True),
+        ).withColumn("shortcut", shortcut & (F.col("rnk") == 2))
+        out += [
+            (r.audio_id, r.speaker, None, r.spk_dur, True)
+            for r in stats.where("shortcut").collect()
+        ]
+        durs = durs.join(
+            stats.where("verify").select("audio_id", "speaker"),
+            ["audio_id", "speaker"],
+            "left_semi",
+        )
+    budgeted = budgeted_topk(
+        durs.withColumn("dur_us", F.floor(F.col("dur") * F.lit(1_000_000.0)).cast("long")),
+        budget=int(budget_sec * 1e6),
+        key="audio_id",
+        weight_col="dur_us",
+        order_cols=("speaker", "start"),
+    )
+    # Spark leaves the order of a sum's inputs to the plan. With the
+    # waveforms as the broadcast side, the rows reach the aggregate in the
+    # budget window's order; with the segments as the broadcast side, as
+    # adaptive execution may choose here, they come in hash-table order.
+    sliced = attach_sliced_samples(budgeted, F.broadcast(audio)).select(
+        "audio_id", "speaker", "samples", "dur"
+    )
+    spk = stubs.embed(sliced).groupBy("audio_id", "speaker").agg(
+        F.array(*[F.avg(F.col("embedding")[i]) for i in range(stubs.EMB_DIM)]).alias("emb_b"),
+        F.sum("dur").alias("audio_duration"),
+    )
+    out += [(r.audio_id, r.speaker, r.emb_b, r.audio_duration, False) for r in spk.collect()]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("early_exit", [True, False])
+def test_host_kernel_speakers_like_the_dataframe_chain(spark, early_exit):
+    """The per-file host-match kernel keeps, embeds and averages the
+    same segments as the DataFrame chain, to the bit, at a budget that
+    drops segments of every file it verifies."""
+    from speech_data_pipeline_spark.ml import stubs
+
+    # At this seed, summing the three tied 1.5 s segments of ("two", "A")
+    # in reverse order changes their mean.
+    rng = np.random.default_rng(25)
+    audio = spark.createDataFrame(
+        [(aid, rng.standard_normal(SR * 20).tolist(), SR)
+         for aid in ("three", "short", "two", "solo")],
+        ["audio_id", "samples", "sr"],
+    )
+    segs = spark.createDataFrame(HOST_SEGS, ["audio_id", "speaker", "start", "end"])
+    got = rows(
+        stubs.host_match_speakers(audio, segs, budget_sec=BUDGET_SEC, early_exit=early_exit)
+    )
+    assert got == host_speakers_chain(audio, segs, BUDGET_SEC, early_exit)
+
+    # A file whose longest segment alone exceeds the budget keeps none.
+    verified = {r[0] for r in got if not r[4]}
+    assert verified == ({"three", "two"} if early_exit else {"three", "two", "solo"})
+    left_out = {("three", "A")} if early_exit else set()  # the dominant speaker
+    for aid in verified:
+        kept = sum(r[3] for r in got if r[0] == aid)
+        offered = sum(
+            e - s for a, spk, s, e in HOST_SEGS if a == aid and (a, spk) not in left_out
+        )
+        assert 0 < kept <= BUDGET_SEC < offered
+    assert [r[:2] for r in got if r[4]] == ([("short", "B")] if early_exit else [])
+
+
 def test_host_match_schema_and_acceptance(stages):
     m = stages["matches"]
     assert set(m.columns) == {
