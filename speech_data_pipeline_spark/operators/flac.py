@@ -22,8 +22,7 @@ sample sizes, UTF-8-coded frame numbers, CRC-8 (header) and CRC-16
 The encoder is deliberately simpler (CONSTANT / VERBATIM / FIXED with
 per-subframe order selection, optional wasted-bit packing, optional
 LPC-form emission, any partition order, all channel assignments): it
-exists to (a) give the pipeline a lossless export codec smaller than
-WAV and (b) round-trip-prove the decoder without a codec binary in the
+exists to round-trip-prove the decoder without a codec binary in the
 container. Encoder and decoder share only the CRC tables, which are
 pinned by known-answer tests (CRC-8/0x07 of b"123456789" == 0xF4,
 CRC-16/0x8005-unreflected == 0xFEE8), so a shared bug cannot silently

@@ -98,12 +98,11 @@ def attach_sliced_samples(
 
 
 def _walk_riff(b: bytes):
-    """Shared RIFF chunk walk: returns ``(fmt6, data_off, data_size)``
-    where ``fmt6`` is the 6-tuple of the fmt chunk with
-    WAVE_FORMAT_EXTENSIBLE already resolved to its SubFormat code.
-    Raises ``ValueError`` (never ``struct.error``) on truncated or
-    malformed headers — the contract sources/wavmeta.py maps to
-    ok=false rows.
+    """RIFF chunk walk of :func:`decode_wav_bytes`: returns ``(fmt6,
+    data_off, data_size)`` where ``fmt6`` is the 6-tuple of the fmt
+    chunk with WAVE_FORMAT_EXTENSIBLE already resolved to its SubFormat
+    code. Raises ``ValueError`` (never ``struct.error``) on truncated or
+    malformed headers.
     """
     import struct
 
@@ -369,66 +368,6 @@ def decode_audio_bytes(payload: bytes, mono: bool = True) -> tuple[list, int]:
     return decode_wav_bytes(b, mono=mono)
 
 
-def encode_media_flac(
-    df: DataFrame,
-    bps: int = 16,
-    block_size: int = 4096,
-    id_col: str = "media_id",
-    samples_col: str = "samples",
-    sr_col: str = "sr",
-) -> DataFrame:
-    """Lossless FLAC export stage: ``(media_id, samples array<double>,
-    sr)`` → ``(media_id, payload binary, n_samples, pcm_bytes,
-    flac_bytes)``.
-
-    The K5-family export in the reference writes WAV segments
-    (modules/export.py writes 16-bit PCM via pydub); this stage is the
-    same sink contract with a compressed container — typically 40-60%
-    of the PCM size on speech-like material at zero fidelity cost (the
-    decoder MD5-verifies). Arrow-batched ``mapInPandas``: each media
-    row encodes independently, so a 100 TB export is a map-only stage
-    with no shuffle; the emitted size columns make compression ratio a
-    queryable result instead of a log line.
-    """
-    from speech_data_pipeline_spark.operators.flac import encode_flac_bytes
-
-    lim = float(1 << (bps - 1))
-    width = bps // 8
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads, n_s, raw_b, flac_b = [], [], [], []
-            for samples, sr in zip(pdf[samples_col], pdf[sr_col]):
-                x = np.asarray(samples, dtype=np.float64)
-                ints = np.clip(np.rint(x * lim), -lim, lim - 1).astype(np.int64)
-                blob = encode_flac_bytes(
-                    [ints.tolist()], int(sr), bps=bps, block_size=block_size
-                )
-                payloads.append(blob)
-                n_s.append(len(ints))
-                raw_b.append(len(ints) * width)
-                flac_b.append(len(blob))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": payloads,
-                    "n_samples": n_s,
-                    "pcm_bytes": raw_b,
-                    "flac_bytes": flac_b,
-                }
-            )
-
-    return df.select(id_col, samples_col, sr_col).mapInPandas(
-        kernel,
-        schema=(
-            f"{id_col} long, payload binary, n_samples long, "
-            "pcm_bytes long, flac_bytes long"
-        ),
-    )
-
-
 def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
     """Decode binary media to waveform.
 
@@ -570,85 +509,3 @@ def decode_media_at_sr(
                 )
 
     return df.mapInPandas(kernel, schema=out_schema)
-
-
-def parse_wav_header(payload: bytes) -> dict:
-    """Header-only RIFF/WAV probe: format, rate, channels, bit depth,
-    frame count, duration — WITHOUT touching sample data (the ``data``
-    chunk is sized, never read). This is the real S6 duration probe
-    (reference modules/vad_multi.py:12-16 opens the file with pydub
-    just to get ``duration_seconds``); cost is O(header) bytes per
-    file, so a metadata scan of a 100 TB corpus reads megabytes.
-
-    Raises on non-RIFF payloads — callers map that to the reference's
-    0.0-duration broken-file contract.
-    """
-    import struct
-
-    b = bytes(payload[: 1 << 16])  # headers live in the first chunks
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAV payload")
-    fmt6, _data_off, data_size = _walk_riff(b)
-    audio_format, n_ch, sr, _brate, block_align, bits = fmt6
-    frames = data_size // block_align if block_align else 0
-    return {
-        "format_tag": int(audio_format),
-        "sample_rate": int(sr),
-        "channels": int(n_ch),
-        "bits": int(bits),
-        "n_frames": int(frames),
-        "duration": (frames / sr) if sr else 0.0,
-    }
-
-
-def encode_media_vorbis(
-    df: DataFrame,
-    id_col: str = "media_id",
-    samples_col: str = "samples",
-    sr_col: str = "sr",
-) -> DataFrame:
-    """Lossy Ogg Vorbis export stage: ``(media_id, samples
-    array<double>, sr)`` → ``(media_id, payload binary, n_samples,
-    pcm_bytes, ogg_bytes)`` — the Ogg sibling of
-    :func:`encode_media_flac` (same sink contract). Any sample rate is
-    legal (Vorbis carries the rate verbatim); output length is exact to
-    the sample (the encoder writes the true length into the final page
-    granule, which the decoder honors).
-
-    Arrow-batched ``mapInPandas``, one row per media id — a 100 TB
-    export is a map-only stage with no shuffle; emitted size columns
-    make the compression ratio queryable.
-    """
-    from speech_data_pipeline_spark.operators.vorbis import encode_vorbis
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads, n_s, raw_b, ogg_b = [], [], [], []
-            for mid, samples, sr in zip(
-                pdf[id_col], pdf[samples_col], pdf[sr_col]
-            ):
-                x = np.asarray(samples, dtype=np.float64)
-                blob = encode_vorbis([x], int(sr), serial=int(mid) & 0x7FFFFFFF)
-                payloads.append(blob)
-                n_s.append(len(x))
-                raw_b.append(len(x) * 2)  # 16-bit PCM equivalent
-                ogg_b.append(len(blob))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": payloads,
-                    "n_samples": n_s,
-                    "pcm_bytes": raw_b,
-                    "ogg_bytes": ogg_b,
-                }
-            )
-
-    return df.select(id_col, samples_col, sr_col).mapInPandas(
-        kernel,
-        schema=(
-            f"{id_col} long, payload binary, n_samples long, "
-            "pcm_bytes long, ogg_bytes long"
-        ),
-    )

@@ -95,22 +95,19 @@ def run_incremental_stage(
     inputs: DataFrame,
     stage_fn: Callable[[DataFrame], DataFrame],
     out_path: str,
-    keys: list[str] | None = None,
+    keys: list[str],
 ) -> DataFrame:
-    """Run ``stage_fn`` over not-yet-done inputs; append to ``out_path``.
+    """Run ``stage_fn`` over the pending inputs; append to ``out_path``.
 
-    ``keys`` are the pending ``audio_id``s when the caller has computed
-    them with :func:`pending_keys` (``run_pipeline`` does, from one
-    listing per call); by default they are computed here from
-    :func:`listed_keys` of ``inputs``. ``stage_fn`` gets
-    ``pending(inputs, keys)`` and is not called when no key is pending.
-    It must return a DataFrame containing ``audio_id`` and may include
-    ``status``/``error`` columns (defaulted to 'ok'/null). Returns the
-    full stage table after the append. Idempotent: a second call with
-    the same inputs computes nothing new.
+    ``keys`` are the pending ``audio_id``s, as :func:`pending_keys`
+    computes them (``run_pipeline`` does, from one listing per call).
+    ``stage_fn`` gets ``pending(inputs, keys)`` and is not called when
+    no key is pending. It must return a DataFrame containing
+    ``audio_id`` and may include ``status``/``error`` columns
+    (defaulted to 'ok'/null). Returns the full stage table after the
+    append. Idempotent: a second call with the keys pending after the
+    first computes nothing new.
     """
-    if keys is None:
-        keys = pending_keys(spark, listed_keys(inputs), out_path)
     if not keys:
         if os.path.exists(out_path):
             return read_table(spark, out_path)

@@ -43,21 +43,11 @@ def _vad(audio: DataFrame, _up, _hosts, **kw) -> DataFrame:
 
 
 def _separation(audio: DataFrame, vad: DataFrame, _hosts, **kw) -> DataFrame:
-    scored, gaps = st.separation_stage(audio, vad, **kw)
-    return scored.withColumn("kind", F.lit("window")).unionByName(
-        gaps.select(
-            "audio_id", "start", "end",
-            F.lit(None).cast("double").alias("v_r"),
-            F.lit(None).cast("double").alias("nv_r"),
-            F.lit("gap").alias("kind"),
-        )
-    )
+    return st.separation_stage(audio, vad, **kw)
 
 
 def _diarization(audio: DataFrame, sep: DataFrame, _hosts, **kw) -> DataFrame:
-    scored = sep.where(F.col("kind") == "window").drop("kind")
-    gaps = sep.where(F.col("kind") == "gap").select("audio_id", "start", "end")
-    return st.diarization_stage(scored, gaps, **kw)
+    return st.diarization_stage(sep, **kw)
 
 
 def _rematch(audio: DataFrame, diar: DataFrame, _hosts, **kw) -> DataFrame:

@@ -17,11 +17,13 @@ verifies.
 
 Stage ↔ reference trace map:
   vad_stage          → §3.2 (scan → VAD M1 → pad/clamp F11 → merge W1)
-  separation_stage   → separation_filter.py: lead-gap J4 + windows W4 +
-                       per-file separation M2 and energy A5/A6 + ratio
-                       projections
-  diarization_stage  → §3.3 (vocal combine F1/F2/U1/W9/W1 →
-                       diarize M3 → sweep W3 → overlap flag F5)
+  separation_stage   → separation_filter.py: windows W4 + per-file
+                       separation M2 and energy A5/A6 + ratio
+                       projections, and lead-gap J4, as one table
+                       tagged ``window`` or ``gap``
+  diarization_stage  → §3.3 (voice/silence tag F1/F2, which stands in
+                       for the U1 union → combine W9/W1 → diarize M3 →
+                       sweep W3 → overlap flag F5)
   rematch_stage      → speaker_rematch.py: per-file kernel (chunk
                        F3/F4 → slice → embed M4 → cluster M5) →
                        relabel X3 → merge W2 → mapping J6, guards F9/F10
@@ -81,8 +83,17 @@ def separation_stage(
     vad: DataFrame,
     window: float = 3.0,
     hop: float = 1.0,
-) -> tuple[DataFrame, DataFrame]:
-    """VAD segments → (windowed vocal-ratio table, gap/nonvad table)."""
+) -> DataFrame:
+    """VAD segments → separation table ``(audio_id, start, end, v_r,
+    nv_r, kind)`` (seconds).
+
+    ``kind = 'window'`` rows are the ``window``-second windows at
+    ``hop``-second steps over each VAD segment, with the vocal and
+    nonvocal energy ratios ``v_r`` and ``nv_r`` of the per-file
+    separation kernel (:func:`~speech_data_pipeline_spark.ml.stubs.separate`).
+    ``kind = 'gap'`` rows are the spans between consecutive VAD
+    segments, with null ratios.
+    """
     wins = sliding_windows(
         vad.withColumn("start_us", _us(F.col("start"))).withColumn(
             "end_us", _us(F.col("end"))
@@ -95,13 +106,13 @@ def separation_stage(
     scored = (
         stubs.separate(audio, wins)
         .withColumn("v_r", F.when(total > 0, F.col("v_e") / total).otherwise(0.0))
-        .withColumn("nv_r", 1 - F.col("v_r"))
         .select(
             "audio_id",
             (F.col("win_start") / 1e6).alias("start"),
             (F.col("win_end") / 1e6).alias("end"),
             "v_r",
-            "nv_r",
+            (1 - F.col("v_r")).alias("nv_r"),
+            F.lit("window").alias("kind"),
         )
     )
     w = Window.partitionBy("audio_id").orderBy("start", "end")
@@ -112,35 +123,41 @@ def separation_stage(
             "audio_id",
             F.col("end").alias("start"),
             F.col("next_start").alias("end"),
-            F.struct(F.col("start").alias("s"), F.col("end").alias("e")).alias("prev"),
+            F.lit(None).cast("double").alias("v_r"),
+            F.lit(None).cast("double").alias("nv_r"),
+            F.lit("gap").alias("kind"),
         )
     )
-    return scored, gaps
+    return scored.unionByName(gaps)
 
 
 def diarization_stage(
-    scored: DataFrame,
-    gaps: DataFrame,
+    sep: DataFrame,
     v_r_threshold: float = 0.5,
     max_chunk: float = 1000.0,
     join_interval: float = 5.0,
 ) -> DataFrame:
-    """Windowed scores + gaps → speaker segment table.
+    """Separation table (:func:`separation_stage`) → speaker segment
+    table.
 
-    One row per flattened timeline piece: ``(audio_id, speaker, start,
-    end, overlapping)``, where ``speaker`` is the active tags joined by
-    ``+`` and ``overlapping`` says more than one is active (F5). A
-    single projection of the sweep, so the chain under it runs once.
+    The windows with ``v_r >= v_r_threshold`` are voice and the gaps are
+    silence. Both are merged into sessions (broken by a gap over
+    ``join_interval`` seconds, capped at ``max_chunk`` seconds), and the
+    sessions that hold voice go to the diarizer. One row per
+    flattened timeline piece: ``(audio_id, speaker, start, end,
+    overlapping)``, where ``speaker`` is the active tags joined by ``+``
+    and ``overlapping`` says more than one is active (F5). A single
+    projection of the sweep, so the chain under it runs once.
     """
-    vocal = scored.where(F.col("v_r") >= v_r_threshold).select(
-        "audio_id", "start", "end", F.lit("voice").alias("seg_type")
+    vocal = (F.col("kind") == "window") & (F.col("v_r") >= v_r_threshold)
+    segs = sep.where(vocal | (F.col("kind") == "gap")).select(
+        "audio_id",
+        "start",
+        "end",
+        F.when(vocal, F.lit("voice")).otherwise(F.lit("silence")).alias("seg_type"),
     )
-    silence = gaps.select(
-        "audio_id", "start", "end", F.lit("silence").alias("seg_type")
-    )
-    unioned = vocal.unionByName(silence)
     combined = sessionize_capped(
-        unioned.withColumn("start_us", _us(F.col("start"))).withColumn(
+        segs.withColumn("start_us", _us(F.col("start"))).withColumn(
             "end_us", _us(F.col("end"))
         ),
         interval=join_interval * 1e6,

@@ -1,4 +1,4 @@
-"""Audio corpus sources (SURVEY.md §2.1 S1/S9/S10).
+"""Audio corpus sources (SURVEY.md §2.1 S1/S9).
 
 The reference scans a folder for six audio extensions and keys
 everything by the file's basename (modules/models/utils.py:11-22).
@@ -7,9 +7,9 @@ file listing and reads are distributed, and the payload column is only
 materialized for rows that survive pushed filters.
 
 At 100 TB the corpus is millions of objects on S3/GCS: ``binaryFile``
-parallelizes listing; pair it with ``spark.sql.files.maxPartitionBytes``
-and the multimodal chunker (operators/multimodal.py) so no single row
-exceeds Arrow limits.
+parallelizes listing, and a scan that leaves ``content`` out lists files
+without reading their bytes. The decoded waveform of a file is one row,
+so a single file must fit a row and an Arrow batch.
 """
 
 from __future__ import annotations
@@ -66,33 +66,6 @@ def scan_reference_voiceprints(spark: SparkSession, directory: str) -> DataFrame
     )
     return df.select(
         audio_id_from_path(F.col("path")).alias("host_id"), "path", "content"
-    )
-
-
-def resolve_transcript_sidecars(
-    audio: DataFrame, sidecars: DataFrame
-) -> DataFrame:
-    """S10: transcript sidecar preference join (reference
-    modules/models/alignment.py:37-44): prefer
-    ``{base}.en-orig_processed.txt`` over ``{base}.en_processed.txt``,
-    drop files with neither. Two left joins + ``coalesce`` — no UDF,
-    broadcastable sidecar index.
-
-    ``sidecars``: ``(audio_id, kind, text)`` with kind in
-    {'en-orig', 'en'}.
-    """
-    orig = sidecars.where(F.col("kind") == "en-orig").select(
-        "audio_id", F.col("text").alias("_orig")
-    )
-    plain = sidecars.where(F.col("kind") == "en").select(
-        "audio_id", F.col("text").alias("_plain")
-    )
-    return (
-        audio.join(orig, "audio_id", "left")
-        .join(plain, "audio_id", "left")
-        .withColumn("transcript", F.coalesce("_orig", "_plain"))
-        .where(F.col("transcript").isNotNull())
-        .drop("_orig", "_plain")
     )
 
 

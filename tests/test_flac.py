@@ -278,32 +278,3 @@ def test_decode_media_handles_flac_and_wav(spark):
     want = np.asarray(pcm, dtype=np.float64) / 32768.0
     assert np.allclose(out[1]["samples"], want)
     assert np.allclose(out[2]["samples"], want, atol=1e-4)
-
-
-def test_encode_media_flac_stage_roundtrip(spark):
-    from speech_data_pipeline_spark.operators.multimodal import (
-        decode_media,
-        encode_media_flac,
-    )
-
-    sr = 16_000
-    rows = []
-    for mid in (1, 2, 3):
-        pcm = _rand_pcm(1500 + mid * 37, 16, seed=20 + mid)[0]
-        wave = (np.asarray(pcm, dtype=np.float64) / 32768.0).tolist()
-        rows.append((mid, wave, sr))
-    df = spark.createDataFrame(rows, "media_id long, samples array<double>, sr int")
-    enc = encode_media_flac(df)
-    got = {r["media_id"]: r for r in enc.collect()}
-    assert set(got) == {1, 2, 3}
-    for mid, wave, _ in rows:
-        r = got[mid]
-        assert r["n_samples"] == len(wave)
-        assert r["pcm_bytes"] == len(wave) * 2
-        assert 0 < r["flac_bytes"] < r["pcm_bytes"]  # actually compresses
-    # Decode the exported payloads back through the standard decode stage.
-    dec = decode_media(enc.select("media_id", "payload"))
-    back = {r["media_id"]: r for r in dec.collect()}
-    for mid, wave, _ in rows:
-        assert back[mid]["sr"] == sr
-        assert np.allclose(back[mid]["samples"], wave, atol=1.0 / 32768.0)

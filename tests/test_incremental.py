@@ -6,6 +6,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from speech_data_pipeline_spark.plans.incremental import (
+    listed_keys,
     pending,
     pending_keys,
     read_table,
@@ -58,20 +59,24 @@ def test_run_incremental_stage_idempotent(spark):
         calls.append([r.audio_id for r in df.select("audio_id").collect()])
         return df.withColumn("result", F.upper("audio_id"))
 
+    def run(inputs):
+        keys = pending_keys(spark, listed_keys(inputs), out_path)
+        return run_incremental_stage(spark, inputs, stage, out_path, keys)
+
     try:
         inputs1 = spark.createDataFrame([("a",), ("b",)], ["audio_id"])
-        out = run_incremental_stage(spark, inputs1, stage, out_path)
+        out = run(inputs1)
         assert sorted(r.audio_id for r in out.collect()) == ["a", "b"]
 
         # second run, superset input: only 'c' is computed
         inputs2 = spark.createDataFrame([("a",), ("b",), ("c",)], ["audio_id"])
-        out = run_incremental_stage(spark, inputs2, stage, out_path)
+        out = run(inputs2)
         assert sorted(r.audio_id for r in out.collect()) == ["a", "b", "c"]
         assert sorted(calls[1]) == ["c"]
 
         # third run, no new input: stage_fn not called again
         n_calls = len(calls)
-        out = run_incremental_stage(spark, inputs2, stage, out_path)
+        out = run(inputs2)
         assert len(calls) == n_calls
         assert out.count() == 3
     finally:

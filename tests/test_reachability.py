@@ -57,15 +57,6 @@ KEEP = {
     "operators.vorbis._Lap",
     "operators.vorbis.decode_audio_packet",
     "operators.vorbis.decode_vorbis_bytes",
-    # Adopt or delete in item 1: the WAV header reader, unneeded if the
-    # ledger key comes from the listing.
-    "operators.multimodal.parse_wav_header",
-    "sources.wavmeta._FilesPartition",
-    "sources.wavmeta.WavMetaDataSource",
-    "sources.wavmeta.WavMetaReader",
-    "sources.wavmeta._meta_tuple",
-    "sources.wavmeta.WavMetaStreamReader",
-    "sources.wavmeta.register_wavmeta",
     # Adopt or delete in item 5, once the episodes workload shows
     # whether scheduling long files first earns its keep.
     "sources.audio.longest_first_hint",
@@ -74,16 +65,8 @@ KEEP = {
     # Adopt or delete in item 9 (one canonical sample rate).
     "operators.multimodal.decode_media_at_sr",
     "ml.dsp.resample",
-    # Delete: stage 5, which the paper toggles off.
-    "ml.stubs.transcribe",
-    "ml.stubs.transcribe_segments",
-    "ml.stubs.detect_language",
-    "ml.stubs.score_quality",
-    "ml.stubs.align",
-    "sources.audio.resolve_transcript_sidecars",
-    # Delete in item 8: the encoders, which only tests call.
-    "operators.multimodal.encode_media_flac",
-    "operators.multimodal.encode_media_vorbis",
+    # Keep while the FLAC and Vorbis decoders stay: the encoders make
+    # the decoder tests' inputs (item 8).
     "operators.flac._BitWriter",
     "operators.flac._utf8_number_bytes",
     "operators.flac._zigzag",

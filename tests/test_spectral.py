@@ -51,46 +51,6 @@ def test_stft_frame_energy_matches_parseval(spark):
     assert dsp.frame_signal(np.zeros(0), 8, 2).shape == (1, 8)
 
 
-def test_score_quality_dnsmos_orchestration(spark):
-    """M10: full reference orchestration (resample -> doubling pad ->
-    9.01s/1s hop loop -> calibration -> hop means), model stubbed."""
-    from speech_data_pipeline_spark.ml.stubs import score_quality
-
-    rng = np.random.default_rng(3)
-    rows_in = [
-        ("one_sec", (0.3 * rng.standard_normal(SR)).tolist(), SR),
-        ("twelve_sec", (0.3 * rng.standard_normal(12 * SR)).tolist(), SR),
-        ("eight_k", (0.3 * rng.standard_normal(8000)).tolist(), 8000),
-        ("empty", [], SR),
-    ]
-    df = spark.createDataFrame(rows_in, ["audio_id", "samples", "sr"])
-    out = {r.audio_id: r for r in score_quality(df).collect()}
-
-    # 1 s clip doubles 1->2->4->8->16 s; num_hops = floor(16) - 9.01 + 1 = 7
-    assert out["one_sec"].num_hops == 7
-    assert out["one_sec"].len_in_sec == pytest.approx(1.0)
-    # 12 s clip: no padding; num_hops = floor(12) - 9.01 + 1 = 3
-    assert out["twelve_sec"].num_hops == 3
-    # 8 kHz input resampled to 16 kHz: len_in_sec preserved
-    assert out["eight_k"].sr == SR
-    assert out["eight_k"].len_in_sec == pytest.approx(1.0)
-    assert out["empty"].num_hops == 0
-    assert out["empty"].mos is None or np.isnan(out["empty"].mos)
-    for aid in ("one_sec", "twelve_sec", "eight_k"):
-        r = out[aid]
-        assert r.mos == r.ovrl
-        # calibrated scores stay in a sane MOS range
-        for v in (r.ovrl, r.sig, r.bak):
-            assert 0.0 < v < 6.0
-        # calibration actually applied (poly != identity)
-        assert r.ovrl != r.ovrl_raw
-    # deterministic across runs/partitionings
-    out2 = {r.audio_id: r for r in score_quality(df.repartition(5)).collect()}
-    assert {a: tuple(r) for a, r in out.items()} == {
-        a: tuple(r) for a, r in out2.items()
-    }
-
-
 def test_resample_nyquist_fold_exact():
     """Review-found defect: downsampling onto an even length must fold
     the ±m/2 pair into the output Nyquist bin at FULL amplitude

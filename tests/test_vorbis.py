@@ -420,35 +420,6 @@ def test_decode_media_spark_path_vorbis(spark):
     assert 10 * np.log10(np.dot(sig, sig) / np.dot(err, err)) > 35.0
 
 
-def test_encode_media_vorbis_spark_sink(spark):
-    from speech_data_pipeline_spark.operators.multimodal import (
-        decode_media,
-        encode_media_vorbis,
-    )
-
-    sr = 8000
-    t = np.arange(3000)
-    x = (0.4 * np.sin(2 * np.pi * 220 * t / sr)).tolist()
-    df = spark.createDataFrame(
-        [(7, x, sr)], "media_id long, samples array<double>, sr int"
-    )
-    enc = encode_media_vorbis(df).collect()
-    assert len(enc) == 1
-    row = enc[0]
-    assert row["n_samples"] == 3000
-    assert row["ogg_bytes"] == len(row["payload"])
-    dec = decode_media(
-        spark.createDataFrame(
-            [(7, bytearray(row["payload"]))], "media_id long, payload binary"
-        )
-    ).collect()[0]
-    assert dec["sr"] == sr and len(dec["samples"]) == 3000
-    got = np.array(dec["samples"])
-    ref = np.array(x)
-    err = got - ref
-    assert 10 * np.log10(np.dot(ref, ref) / np.dot(err, err)) > 35.0
-
-
 # ---------------------------------------------------------------------------
 # mixed long/short-block streams (hybrid windows through the bitstream)
 # ---------------------------------------------------------------------------
