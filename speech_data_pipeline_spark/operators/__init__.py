@@ -19,8 +19,6 @@ Modules:
 - ``recurrence``  — per-key EWMA and CUSUM recurrences
 - ``skew``        — salted two-phase aggregation
 - ``spectral``    — per-frame FFT energy
-- ``multimodal``  — binary media payloads: WAV decode, waveform chunking
-                    and segment slicing, frame sampling
-- ``flac``, ``vorbis`` — pure-NumPy audio codecs behind ``multimodal``'s
-                    decode
+- ``multimodal``  — binary media payloads: WAV decode, segment slicing,
+                    frame sampling
 """

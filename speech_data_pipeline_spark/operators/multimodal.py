@@ -5,16 +5,11 @@ Design (SURVEY.md §1.1 waveform row + known-hard #5): media lives in a
 are Arrow-batched ``mapInPandas`` stages so bytes stream executor-side
 in bounded batches and never concentrate on the driver.
 
-Audio decode is REAL for every container the repo can verify without
-external codecs: RIFF/WAV (PCM 8-32, IEEE float, G.711 μ-law/A-law,
-IMA-ADPCM — :func:`decode_wav_bytes`), native FLAC (pure-NumPy decoder
-with CRC + MD5 verification, operators/flac.py) and Ogg Vorbis
-(operators/vorbis.py), dispatched by magic bytes in
-:func:`decode_audio_bytes`. Any other payload (mp3/m4a/aac) goes to
-the WAV decoder and raises ``NotImplementedError`` naming its
-container; a deterministic fake sits behind ``fake=True``, and the
-Spark-side plumbing — schema, batch iteration — is real and
-tested either way.
+Audio decode is real for RIFF/WAV, the format the pipeline's stages
+read (PCM 8-32, IEEE float, G.711 μ-law/A-law, IMA-ADPCM —
+:func:`decode_wav_bytes`). The package ships no codec library, so any
+other payload (FLAC, Ogg, mp3, m4a, aac) raises
+``NotImplementedError`` naming the container its magic bytes identify.
 """
 
 from __future__ import annotations
@@ -225,6 +220,10 @@ def _ima_adpcm_decode(data: bytes, n_ch: int, block_align: int):
 
 def _container(b: bytes) -> str:
     """The compressed container that ``b``'s magic bytes identify."""
+    if b[:4] == b"fLaC":
+        return "flac: fLaC marker"
+    if b[:4] == b"OggS":
+        return "ogg: OggS page"
     if b[:3] == b"ID3":
         return "mp3: ID3 tag"
     if b[4:8] == b"ftyp":
@@ -251,16 +250,15 @@ def decode_wav_bytes(
     library needed for any RIFF-native coding (reference decode sites:
     modules/separation_filter.py:101 librosa.load,
     modules/speaker_rematch.py:47 torchaudio.load — both hit WAV files
-    produced by the pipeline's own export). Native FLAC is decoded by
-    the sibling pure-NumPy codec (operators/flac.py) via
-    :func:`decode_audio_bytes`, as is Ogg Vorbis (operators/vorbis.py).
+    produced by the pipeline's own export). It is the package's only
+    audio decoder.
 
     A non-RIFF payload raises ``NotImplementedError`` naming the
-    container its magic bytes identify (mp3, mp4/m4a, aac), as does a
-    RIFF payload of another form or a compressed WAV format tag; a
-    truncated or malformed RIFF/WAV payload raises ``ValueError``,
-    including a data chunk shorter than its declared size or ending in a
-    partial sample frame.
+    container its magic bytes identify (flac, ogg, mp3, mp4/m4a, aac),
+    as does a RIFF payload of another form or a compressed WAV format
+    tag; a truncated or malformed RIFF/WAV payload raises
+    ``ValueError``, including a data chunk shorter than its declared
+    size or ending in a partial sample frame.
     """
     import struct
 
@@ -270,8 +268,8 @@ def decode_wav_bytes(
     if b[:4] != b"RIFF":
         raise NotImplementedError(
             f"not a RIFF/WAV payload ({_container(b)}); the package decodes "
-            "RIFF/WAV, FLAC and Ogg Vorbis only, with no codec backend "
-            "(librosa/ffmpeg) for other formats"
+            "RIFF/WAV only, with no codec backend (librosa/ffmpeg) for "
+            "other formats"
         )
     if len(b) < 12:
         raise ValueError("malformed WAV: truncated RIFF header")
@@ -340,63 +338,16 @@ def decode_wav_bytes(
     return x.tolist(), int(sr)
 
 
-def decode_audio_bytes(payload: bytes, mono: bool = True) -> tuple[list, int]:
-    """Magic-byte audio dispatch: ``fLaC`` → the pure-NumPy FLAC
-    decoder (operators/flac.py), ``OggS`` → the pure-NumPy Vorbis I
-    decoder (operators/vorbis.py — codebooks/floor1/residues/IMDCT, all
-    from the in-stream setup header), anything else →
-    :func:`decode_wav_bytes` (PCM / IEEE-float / G.711 / IMA-ADPCM),
-    which raises ``NotImplementedError`` naming the container of a
-    non-RIFF payload and ``ValueError`` on a malformed RIFF one. All
-    return ``(samples_or_channels, sr)`` with identical mono semantics,
-    so every decode kernel takes any container transparently. Not
-    decoded: Ogg Opus, mp3, m4a and aac.
-    """
-    b = bytes(payload)
-    if b[:4] == b"fLaC":
-        from speech_data_pipeline_spark.operators.flac import decode_flac_bytes
-
-        return decode_flac_bytes(b, mono=mono)
-    if b[:4] == b"OggS":
-        # Ogg container: Vorbis decodes natively (operators/vorbis.py);
-        # Opus raises its documented CELT/SILK seam inside
-        from speech_data_pipeline_spark.operators.vorbis import (
-            decode_vorbis_bytes,
-        )
-
-        return decode_vorbis_bytes(b, mono=mono)
-    return decode_wav_bytes(b, mono=mono)
-
-
-def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode binary media to waveform.
-
-    Real path: RIFF/WAV via :func:`decode_wav_bytes` (pure NumPy, no
-    codec library): PCM, IEEE-float, G.711 μ-law/A-law, IMA ADPCM —
-    plus native FLAC via :func:`~speech_data_pipeline_spark.operators.
-    flac.decode_flac_bytes` and Ogg Vorbis via
-    :func:`~speech_data_pipeline_spark.operators.vorbis.
-    decode_vorbis_bytes` (magic-byte dispatch in
-    :func:`decode_audio_bytes`). Other payloads (mp3/m4a/aac) raise
-    ``NotImplementedError`` — the package depends on no codec library
-    (librosa/ffmpeg). With ``fake=True`` a deterministic pseudo-decode (bytes →
-    floats in [-1, 1)) exercises the plumbing for arbitrary payloads.
+def decode_media(df: DataFrame) -> DataFrame:
+    """Decode binary media ``(media_id, payload)`` to ``(media_id,
+    samples, sr)`` with :func:`decode_wav_bytes` in one Arrow-batched
+    kernel. A payload that is not RIFF/WAV raises
+    ``NotImplementedError`` naming its container.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if fake:
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "samples": pdf["payload"].map(
-                            lambda b: [((x / 255.0) * 2 - 1) for x in bytes(b)[:256]]
-                        ),
-                        "sr": 16_000,
-                    }
-                )
-                continue
-            decoded = pdf["payload"].map(decode_audio_bytes)
+            decoded = pdf["payload"].map(decode_wav_bytes)
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -480,7 +431,7 @@ def decode_media_at_sr(
 
         for pdf in batches:
             decoded = pdf["payload"].map(
-                lambda b: decode_audio_bytes(b, mono=mono)
+                lambda b: decode_wav_bytes(b, mono=mono)
             )
             if mono:
                 samples = decoded.map(

@@ -108,17 +108,17 @@ def test_decode_wav_rejects_compressed():
         (b"\xff\xfb\x90\x00mp3-frame-junk", "mp3: MPEG"),
         (b"\x00\x00\x00\x20ftypM4A \x00\x00\x00\x00", "mp4/m4a"),
         (b"\xff\xf1\x50\x80\x02\x1f\xfcadts-junk", "aac: ADTS"),
+        (b"fLaC\x00\x00\x00\x22flac-streaminfo", "flac: fLaC"),
+        (b"OggS\x00\x02\x00\x00ogg-page-junk", "ogg: OggS"),
         (b"not audio at all", "unknown format"),
     ],
-    ids=["id3", "mpeg-sync", "ftyp", "adts", "unknown"],
+    ids=["id3", "mpeg-sync", "ftyp", "adts", "flac", "ogg", "unknown"],
 )
-def test_decode_audio_bytes_names_unsupported_container(payload, name):
+def test_decode_wav_bytes_names_unsupported_container(payload, name):
     """A non-RIFF payload raises NotImplementedError naming the container
-    its magic bytes identify, not a pointer back to decode_audio_bytes."""
-    from speech_data_pipeline_spark.operators.multimodal import decode_audio_bytes
-
+    its magic bytes identify, not a pointer to another decoder."""
     with pytest.raises(NotImplementedError, match=name) as e:
-        decode_audio_bytes(payload)
+        decode_wav_bytes(payload)
     assert "use decode_audio_bytes" not in str(e.value)
 
 
@@ -128,11 +128,9 @@ def test_decode_audio_bytes_names_unsupported_container(payload, name):
      lambda w: w[:12] + b"fmt \xff"],
     ids=["riff-6-bytes", "riff-11-bytes", "truncated-fmt", "truncated-chunk-header"],
 )
-def test_decode_audio_bytes_malformed_riff_raises_valueerror(cut):
-    from speech_data_pipeline_spark.operators.multimodal import decode_audio_bytes
-
+def test_decode_wav_bytes_malformed_riff_raises_valueerror(cut):
     with pytest.raises(ValueError, match="malformed WAV"):
-        decode_audio_bytes(cut(make_wav(tone(64))))
+        decode_wav_bytes(cut(make_wav(tone(64))))
 
 
 @pytest.mark.parametrize("size", [744, 743], ids=["whole-frames", "partial-frame"])
@@ -156,7 +154,7 @@ def test_decode_wav_partial_sample_frame_raises_valueerror():
 
 def test_decode_media_through_vad_stage(spark):
     """WAV bytes → decode_media → vad_stage: the full ingest seam with a
-    real decoder, no fake flag."""
+    real decoder."""
     from speech_data_pipeline_spark.plans.stages import vad_stage
 
     sr = 1000
@@ -173,6 +171,26 @@ def test_decode_media_through_vad_stage(spark):
     assert "1" in ids and "2" not in ids
     for r in vad:
         assert r.end > r.start >= 0
+
+
+def test_decode_media_returns_pcm16_wav_samples_exactly(spark):
+    """decode_media on Spark returns a 16-bit WAV's samples scaled by
+    1/32768, to the bit, at the file's rate."""
+    import numpy as np
+
+    sr = 16_000
+    rng = np.random.default_rng(14)
+    pcm = np.clip(np.cumsum(rng.integers(-200, 201, size=2000)), -32767, 32767)
+    data = pcm.astype("<i2").tobytes()
+    wav = (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    df = spark.createDataFrame([(2, bytearray(wav))], "media_id long, payload binary")
+    (row,) = decode_media(df).collect()
+    assert row.media_id == 2 and row.sr == sr
+    assert row.samples == (pcm / 32768.0).tolist()
 
 
 def test_decode_wav_stereo_channels_preserved():

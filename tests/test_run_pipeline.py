@@ -2,15 +2,17 @@
 (seeds 1-3): a cold pass writes exactly the golden stage tables under
 ``tests/golden/clips_seed<seed>/`` (``tools/golden_tables.py``), at any
 shuffle partition count and Arrow batch size, and a rerun with nothing
-new leaves every table as it was. Equality is exact, as multisets of
-rows, with no tolerance. A pass decodes each file once, and leaves nothing it
-persisted in the session's cache, whether it returns or raises. Each
-stage runs its Spark jobs in the job group ``pipeline:<stage>``; a cold
-pass stays under a per-stage job ceiling, and a rerun with nothing new
-only reads each stage table's ok keys.
+new leaves every table as it was, as does a pass over four files
+followed by a pass after the other two are added. Equality is exact, as
+multisets of rows, with no tolerance. A pass decodes each file once, and
+leaves nothing it persisted in the session's cache, whether it returns
+or raises. Each stage runs its Spark jobs in the job group
+``pipeline:<stage>``; a cold pass stays under a per-stage job ceiling,
+and a rerun with nothing new only reads each stage table's ok keys.
 """
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -177,6 +179,21 @@ def test_cold_pass_at_arrow_batches_of_three_rows_equals_golden_tables(spark, cl
 
 def test_rerun_with_nothing_new_leaves_tables_equal(passes):
     assert_tables_equal(passes["noop"], passes["cold"])
+
+
+def test_base_then_delta_equals_golden_tables(spark, clips, tmp_path):
+    """A pass over four of the clips, then one after the other two are
+    copied in, into the same workdir, writes the tables of one cold pass
+    over all six."""
+    names = sorted(os.listdir(clips[0]))
+    assert len(names) == 6
+    audio_dir, workdir = tmp_path / "audio", str(tmp_path / "stages")
+    audio_dir.mkdir()
+    for batch in (names[:4], names[4:]):
+        for name in batch:
+            shutil.copy(os.path.join(clips[0], name), audio_dir)
+        run(spark, (str(audio_dir), clips[1]), workdir)
+    assert_tables_equal(tables(workdir), golden())
 
 
 def test_each_file_decoded_once_per_pass(passes, clips):
