@@ -114,9 +114,10 @@ def test_decode_wav_rejects_compressed():
     ],
     ids=["id3", "mpeg-sync", "ftyp", "adts", "flac", "ogg", "unknown"],
 )
-def test_decode_wav_bytes_names_unsupported_container(payload, name):
-    """A non-RIFF payload raises NotImplementedError naming the container
-    its magic bytes identify, not a pointer to another decoder."""
+def test_decode_audio_bytes_names_unsupported_container(payload, name):
+    """A non-RIFF audio payload handed to decode_wav_bytes raises
+    NotImplementedError naming the container its magic bytes identify,
+    not a pointer to another decoder."""
     with pytest.raises(NotImplementedError, match=name) as e:
         decode_wav_bytes(payload)
     assert "use decode_audio_bytes" not in str(e.value)
@@ -128,7 +129,9 @@ def test_decode_wav_bytes_names_unsupported_container(payload, name):
      lambda w: w[:12] + b"fmt \xff"],
     ids=["riff-6-bytes", "riff-11-bytes", "truncated-fmt", "truncated-chunk-header"],
 )
-def test_decode_wav_bytes_malformed_riff_raises_valueerror(cut):
+def test_decode_audio_bytes_malformed_riff_raises_valueerror(cut):
+    """Audio bytes that open as RIFF but break off before a whole chunk
+    header raise ValueError from decode_wav_bytes."""
     with pytest.raises(ValueError, match="malformed WAV"):
         decode_wav_bytes(cut(make_wav(tone(64))))
 
@@ -171,26 +174,6 @@ def test_decode_media_through_vad_stage(spark):
     assert "1" in ids and "2" not in ids
     for r in vad:
         assert r.end > r.start >= 0
-
-
-def test_decode_media_returns_pcm16_wav_samples_exactly(spark):
-    """decode_media on Spark returns a 16-bit WAV's samples scaled by
-    1/32768, to the bit, at the file's rate."""
-    import numpy as np
-
-    sr = 16_000
-    rng = np.random.default_rng(14)
-    pcm = np.clip(np.cumsum(rng.integers(-200, 201, size=2000)), -32767, 32767)
-    data = pcm.astype("<i2").tobytes()
-    wav = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    df = spark.createDataFrame([(2, bytearray(wav))], "media_id long, payload binary")
-    (row,) = decode_media(df).collect()
-    assert row.media_id == 2 and row.sr == sr
-    assert row.samples == (pcm / 32768.0).tolist()
 
 
 def test_decode_wav_stereo_channels_preserved():
